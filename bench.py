@@ -1,40 +1,46 @@
 """Benchmark harness (driver contract + north-rule scaling evidence).
 
-Default mode: run the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], print ONE JSON line:
+Both modes time the product flagship DAG: one
+``PipelineRunner(spark, <tmp dir>).run(*flagship_stages(fx))`` pass —
+the job jobs/run_pipeline.py submits — into a fresh checkpoint dir
+(enriched checkpoint, four partitioned parquet sinks, three aggregate
+checkpoints, `_pipeline_state` records).
+
+Default mode: run the flagship plus the headline registry queries at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS], print ONE JSON line:
   {"metric": ..., "value": total_sec, "unit": "sec",
    "queries": {name: sec, ...}, "sf": ..., "turns_per_sec": ...}
+Registry queries materialize via the `noop` format (full pipeline
+execution, no driver collect).
 
---scaling mode: run the flagship parse→enrich→route→aggregate DAG at two
-parallelism levels (default local[1] vs local[4] — N vs 4N cores, the
-north rule's sandbox stand-in for N vs 4N executors; override with
-SPARK_GRAFT_SCALE_LO/HI) in separate subprocesses
-(one JVM per master), best-of-N interleaved attempts per level with a
-per-attempt CPU-steal measurement, at the sf4 tier (~25.6M turns —
-enough work per core that compute dominates fixed overhead; noop sinks,
-see run_scaling). Reports throughput at both plus
+--scaling mode: time the flagship pass at two parallelism levels
+(default local[1] vs local[4] — N vs 4N cores, the north rule's sandbox
+stand-in for N vs 4N executors; override with SPARK_GRAFT_SCALE_LO/HI),
+each in a fresh spawned process (one JVM per master), best-of-N
+interleaved attempts per level with a per-attempt CPU-steal measurement,
+at the sf4 tier (~25.6M turns — enough work per core that compute
+dominates fixed overhead). Reports throughput at both plus
 scaling efficiency = (T_lo/T_hi)/(hi/lo) to stdout and BENCH_SCALING.json.
-Low core counts on this 32-vCPU box give each JVM full-core headroom, so
-the measurement reflects engine scaling rather than shared-memory
-bandwidth saturation (local[32] threads share one memory bus — a 4N-
-executor cluster brings 4N× bandwidth; local mode cannot emulate that).
+Low core counts give each JVM full-core headroom, so the measurement
+reflects engine scaling rather than shared-memory bandwidth saturation
+(local[32] threads share one memory bus — a 4N-executor cluster brings
+4N× bandwidth; local mode cannot emulate that).
 
-Both modes time SUSTAINED throughput (untimed sf0.001 warmup first, the
-same contract as the reference's sustained-rate testbed). The flagship
-measurement includes the real partitioned parquet sink write (the
-exporter fan-out); aggregate-only outputs materialize via the `noop`
-format (full pipeline execution, no driver collect).
+Both modes time SUSTAINED throughput (an untimed sf0.001 flagship pass
+first, the same contract as the reference's sustained-rate testbed).
 """
 
 from __future__ import annotations
 
 import json
+import multiprocessing
 import os
-import subprocess
+import shutil
 import sys
+import tempfile
 import time
-
-from pyspark.sql import functions as F
+from concurrent.futures import ProcessPoolExecutor
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -44,7 +50,7 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 # headline queries: every north-rule stage + the heaviest registry ops
 HEADLINE = [
     "flagship",        # end-to-end parse→enrich→route→aggregate (turns/sec metric)
-    "t_parse",         # vectorized grok/regex parse stage
+    "t_parse",         # regexp_extract token parse stage
     "t_counts",        # routing fan-out + countconnector rollup
     "t_conv_rollup",   # salted groupbyattrs conversation rollup (hot key)
     "t_recombine",     # ordered per-conversation reassembly (window)
@@ -61,106 +67,61 @@ def _materialize(df) -> int:
     return df.count()
 
 
+def _n_turns(spark, fixture_dir: str) -> int:
+    return spark.read.parquet(
+        os.path.join(fixture_dir, "transcripts.parquet")
+    ).count()
+
+
+def _time_flagship(spark, fixture_dir: str) -> float:
+    """Wall seconds of one PipelineRunner pass over flagship_stages into
+    a fresh checkpoint dir (removed afterwards)."""
+    from opentelemetry_collector_contrib_spark.plans.flagship import flagship_stages
+    from opentelemetry_collector_contrib_spark.plans.runner import PipelineRunner
+
+    ckpt = tempfile.mkdtemp(prefix="bench_flagship_")
+    try:
+        t0 = time.monotonic()
+        PipelineRunner(spark, ckpt).run(*flagship_stages(fixture_dir))
+        return time.monotonic() - t0
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
 def run_bench(sf_dir: str, cores: str, out_json: bool = True) -> dict:
     from opentelemetry_collector_contrib_spark.fixtures import ensure_fixture_dir
-    from opentelemetry_collector_contrib_spark.plans.flagship import run_flagship
     from opentelemetry_collector_contrib_spark.queries import build_registry
     from opentelemetry_collector_contrib_spark.session import get_spark
 
     spark = get_spark(app_name=f"bench-{cores}", cores=cores)
     fx = ensure_fixture_dir(sf_dir)
     queries, _ = build_registry()
-
-    n_turns = spark.read.parquet(os.path.join(fx, "transcripts.parquet")).count()
+    n_turns = _n_turns(spark, fx)
 
     # untimed warmup at the smoke tier: spins up Python workers and JIT
     # so the timed loop measures SUSTAINED throughput — the same contract
     # as the reference's 10k items/sec sustained baseline
     # (testbed/tests/scenarios.go:130-174), which also excludes startup.
-    warm_fx = ensure_fixture_dir("sf0.001")
-    for df in run_flagship(spark, warm_fx).values():
-        df.write.format("noop").mode("overwrite").save()
+    _time_flagship(spark, ensure_fixture_dir("sf0.001"))
 
     timings: dict[str, float] = {}
-    turns_per_sec = None
     for name in HEADLINE:
-        t0 = time.monotonic()
         if name == "flagship":
-            import shutil
-            import tempfile
-
-            outs = run_flagship(spark, fx)
-            # NO persist of the enriched stage: in-memory materialization
-            # of wide text rows costs more than recomputing the (cheap,
-            # vectorized) parse per consumer — measured 60 s persist vs
-            # ~3 s/pass recompute at sf0.5/local[32]. At cluster scale the
-            # reuse pattern is the runner's parquet checkpoint (columnar,
-            # pruned reads), not executor-memory caching.
-            sink_dir = tempfile.mkdtemp(prefix="bench_sinks_")
-            try:
-                # sinks: ONE pass — multi-match tag, explode, partitioned
-                # parquet write (the actual exporter fan-out, not noop)
-                from opentelemetry_collector_contrib_spark.operators.aggregate import (
-                    count_connector,
-                    sum_connector,
-                )
-                from opentelemetry_collector_contrib_spark.plans.flagship import (
-                    build_router,
-                )
-
-                build_router().write_routed(
-                    outs["enriched"], sink_dir, mark_first=True
-                )
-                # metrics derive from the sinks ALREADY WRITTEN: the
-                # routed parquet IS the tagged table (tags_multi maps
-                # unmatched → default), so counts/durations are pruned
-                # columnar reads of 4-5 columns instead of two more full
-                # parse passes over the raw text. Same results as
-                # run_flagship's plans (route → sink rename only).
-                tagged = spark.read.parquet(sink_dir).withColumnRenamed(
-                    "route", "sink"
-                )
-                _materialize(count_connector(
-                    tagged,
-                    dims={"sink": None, "severity_text": "DEFAULT",
-                          "tool": "<none>", "role": "<none>"},
-                ))
-                _materialize(sum_connector(
-                    tagged,
-                    source_attribute="dur_ms",
-                    dims={"sink": None, "role": "<none>"},
-                    metric_name="total_dur_ms",
-                ))
-                # the conversation rollup needs each source row exactly
-                # once: the _first_route mark on the written sinks gives
-                # that without re-parsing the raw text (pruned columnar
-                # read + pushed boolean filter)
-                from opentelemetry_collector_contrib_spark.operators.group import (
-                    conversation_rollup,
-                )
-
-                once = (
-                    spark.read.parquet(sink_dir)
-                    .filter(F.col("_first_route"))
-                )
-                _materialize(conversation_rollup(once, salted=True))
-            finally:
-                shutil.rmtree(sink_dir, ignore_errors=True)
-            dt = time.monotonic() - t0
-            turns_per_sec = n_turns / dt
+            dt = _time_flagship(spark, fx)
         else:
+            t0 = time.monotonic()
             _materialize(queries[name](spark, sf_dir))
             dt = time.monotonic() - t0
         timings[name] = round(dt, 3)
 
     result = {
-        "metric": "headline query wall time (parse/enrich/route/aggregate + dedup/similarity), noop sink",
+        "metric": "headline query wall time (flagship runner pass + parse/route/aggregate/dedup/similarity queries, noop sink)",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": float(os.path.basename(os.path.normpath(sf_dir))[2:]),
         "n_turns": n_turns,
-        "turns_per_sec": round(turns_per_sec, 1) if turns_per_sec else None,
+        "turns_per_sec": round(n_turns / timings["flagship"], 1),
         "cores": cores,
     }
     if out_json:
@@ -180,47 +141,41 @@ def _cpu_steal_snapshot() -> tuple[int, int]:
         return (0, 0)
 
 
+def flagship_throughput(cores: int, sf_dir: str) -> dict:
+    """One warm flagship pass at local[cores]; runs in a fresh process
+    (see :func:`_flagship_throughput_subprocess`)."""
+    from opentelemetry_collector_contrib_spark.fixtures import ensure_fixture_dir
+    from opentelemetry_collector_contrib_spark.session import get_spark
+
+    spark = get_spark(
+        app_name=f"scale{cores}",
+        cores=cores,
+        extra_conf={"spark.sql.files.maxPartitionBytes": "33554432"},
+    )
+    fx = ensure_fixture_dir(sf_dir)
+    n = _n_turns(spark, fx)
+    _time_flagship(spark, ensure_fixture_dir("sf0.001"))
+    dt = _time_flagship(spark, fx)
+    return {"cores": cores, "sec": round(dt, 3), "turns": n,
+            "turns_per_sec": round(n / dt, 1)}
+
+
 def _flagship_throughput_subprocess(cores: int, sf_dir: str) -> dict:
-    """Run ONLY the flagship DAG in a fresh JVM at local[cores].
+    """Run :func:`flagship_throughput` in a freshly spawned interpreter
+    (its own JVM at local[cores]).
 
     Steal-aware protocol: each attempt records the hypervisor CPU-steal
     percentage observed over its own wall window (/proc/stat deltas), so
     a rerun can tell engine capability from host noise per attempt
     instead of asserting it after the fact."""
-    code = (
-        "import json,os,sys,time;"
-        f"sys.path.insert(0,{os.path.dirname(os.path.abspath(__file__))!r});"
-        "from opentelemetry_collector_contrib_spark.session import get_spark;"
-        "from opentelemetry_collector_contrib_spark.fixtures import ensure_fixture_dir;"
-        "from opentelemetry_collector_contrib_spark.plans.flagship import run_flagship,build_router;"
-        "import tempfile,shutil;"
-        f"spark=get_spark(app_name='scale{cores}',cores={cores},"
-        "extra_conf={'spark.sql.files.maxPartitionBytes':'33554432'});"
-        f"fx=ensure_fixture_dir({sf_dir!r});"
-        "n=spark.read.parquet(os.path.join(fx,'transcripts.parquet')).count();"
-        "wfx=ensure_fixture_dir('sf0.001');"
-        "[df.write.format('noop').mode('overwrite').save() for df in run_flagship(spark,wfx).values()];"
-        "t0=time.monotonic();"
-        "outs=run_flagship(spark,fx);"
-        "import pyspark.sql.functions as S;"
-        "tagged=build_router().tags_multi(outs['enriched']).withColumn('route',S.explode_outer('routes')).drop('routes');"
-        "tagged.write.format('noop').mode('overwrite').save();"
-        "[outs[k].write.format('noop').mode('overwrite').save() for k in ('metrics_counts','metrics_durations','conversation_rollup')];"
-        "dt=time.monotonic()-t0;"
-        f"print('RESULT '+json.dumps({{'cores':{cores},'sec':round(dt,3),'turns':n,'turns_per_sec':round(n/dt,1)}}))"
-    )
     s0, t0 = _cpu_steal_snapshot()
-    out = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True, timeout=1800
-    )
+    with ProcessPoolExecutor(
+        max_workers=1, mp_context=multiprocessing.get_context("spawn")
+    ) as ex:
+        rec = ex.submit(flagship_throughput, cores, sf_dir).result()
     s1, t1 = _cpu_steal_snapshot()
-    steal_pct = round(100.0 * (s1 - s0) / (t1 - t0), 2) if t1 > t0 else 0.0
-    for line in out.stdout.splitlines():
-        if line.startswith("RESULT "):
-            rec = json.loads(line[len("RESULT "):])
-            rec["steal_pct"] = steal_pct
-            return rec
-    raise RuntimeError(f"scaling run local[{cores}] failed:\n{out.stderr[-3000:]}")
+    rec["steal_pct"] = round(100.0 * (s1 - s0) / (t1 - t0), 2) if t1 > t0 else 0.0
+    return rec
 
 
 def run_scaling(sf_dir: str | None = None, lo: int | None = None,
@@ -235,13 +190,11 @@ def run_scaling(sf_dir: str | None = None, lo: int | None = None,
     hi = hi or int(os.environ.get("SPARK_GRAFT_SCALE_HI", "4"))
     # Scaling evidence needs enough work per core that compute dominates
     # fixed per-job overhead (the warm sf0.1 tier finishes in ~8 s
-    # regardless of cores); sf4 ≈ 25.6M turns. Sink materialization in
-    # this mode is `noop` (full compute, no disk): this sandbox is one
-    # kernel + one ext4 volume, so concurrent parquet writers serialize in
-    # the page cache — an artifact a multi-executor cluster writing to
-    # distributed storage does not have. The headline bench (default
-    # mode) keeps the real partitioned write. The tier is generated
-    # deterministically like every other tier.
+    # regardless of cores); sf4 ≈ 25.6M turns. The pass writes real
+    # parquet checkpoints and sinks, like the default mode; on one host
+    # the writers share one kernel and one volume, which a multi-executor
+    # cluster writing to distributed storage does not. The tier is
+    # generated deterministically like every other tier.
     # Default tier sf4 (25.6M turns): at sf2 the 4-core run finishes in
     # ~60 s and fixed per-job overhead + host noise swing efficiency by
     # ±0.05 between identical runs (campaigns 3-6 in BASELINE.md); at

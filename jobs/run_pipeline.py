@@ -29,14 +29,13 @@ sys.path.insert(
 )
 
 
-def main() -> int:
+def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="fixture/table dir")
     ap.add_argument("--checkpoint-dir", required=True)
     ap.add_argument("--cores", default=None)
-    ap.add_argument("--no-pandas-udf", action="store_true")
     ap.add_argument("--force", action="store_true", help="ignore committed state")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     from opentelemetry_collector_contrib_spark.fixtures import ensure_fixture_dir
     from opentelemetry_collector_contrib_spark.plans.flagship import flagship_stages
@@ -49,9 +48,7 @@ def main() -> int:
     fixture_dir = ensure_fixture_dir(args.input)
     spark = get_spark("otel-flagship-pipeline", cores=args.cores)
     runner = PipelineRunner(spark, args.checkpoint_dir)
-    stages, fps = flagship_stages(
-        fixture_dir, use_pandas_udf=not args.no_pandas_udf
-    )
+    stages, fps = flagship_stages(fixture_dir)
 
     t0 = time.time()
     runner.run(stages, fps)

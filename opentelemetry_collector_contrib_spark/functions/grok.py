@@ -312,8 +312,11 @@ class GrokPattern:
             df.columns = names
             return df
 
-        # nondeterministic marking: prevents Catalyst from re-evaluating
-        # the extraction inside pushed-down filters (see operators/parse.py)
+        # The UDF is pure, but marking it nondeterministic stops Catalyst
+        # from substituting it into filters pushed through the projection
+        # above it, which would re-run the whole extraction once per
+        # filter (stacked ArrowEvalPython nodes). No useful scan pushdown
+        # is lost: every downstream predicate depends on the UDF output.
         return _grok.asNondeterministic()(
             F.col(col) if isinstance(col, str) else col
         )

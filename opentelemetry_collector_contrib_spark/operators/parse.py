@@ -10,16 +10,12 @@ All stanza parsers share `parse_from`/`parse_to`/`if`/`on_error`
 Spark-first: every parser that a built-in covers uses the built-in
 (JVM-side, codegen): from_json, from_csv, str_to_map, to_timestamp,
 regexp_extract. Only grok/named-capture regex needs the pandas-UDF path
-(functions/grok.py). The transcripts parse stage below follows the
-BASELINE.json north star: ONE vectorized pandas UDF doing all token
-extractions in a single Arrow round trip.
+(functions/grok.py). The transcripts parse stage below is JVM-only:
+six fixed-token regexp_extract calls, no Python boundary.
 """
 
 from __future__ import annotations
 
-import re
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -35,8 +31,8 @@ from ..functions.severity import (
 # (regex_parser + severity_parser + keyvalue_parser composed, single pass)
 # ---------------------------------------------------------------------------
 
-# identical regexes are used by (1) the pandas UDF, (2) the builtin
-# regexp_extract variant, (3) the DuckDB oracle SQL — divergence-proof.
+# identical regexes are used by (1) the regexp_extract parse below and
+# (2) the DuckDB oracle SQL — divergence-proof.
 TOKEN_PATTERNS: dict[str, str] = {
     "sev_token": r"(?:^| )level=(\S+)",
     "err_code": r"(?:^| )err=(E\d+)",
@@ -46,79 +42,23 @@ TOKEN_PATTERNS: dict[str, str] = {
     "nbytes": r"(?:^| )bytes=(\d+)",
 }
 
-_PARSE_STRUCT = T.StructType(
-    [T.StructField(n, T.StringType(), True) for n in TOKEN_PATTERNS]
-)
 
-
-def _named_group(pattern: str) -> str:
-    """Turn the single positional capture group into the named group RE2's
-    extract_regex requires: first '(' not followed by '?' → '(?P<g>'."""
-    return re.sub(r"\((?!\?)", "(?P<g>", pattern, count=1)
-
-
-def _token_extract_udf():
-    import pyarrow.compute as pc
-
-    pats = {n: _named_group(p) for n, p in TOKEN_PATTERNS.items()}
-
-    @F.pandas_udf(_PARSE_STRUCT)
-    def _extract(s: pd.Series) -> pd.DataFrame:
-        # one Arrow batch in, all token columns out. The regex engine is
-        # pyarrow's RE2 (C++, vectorized) — ~4× faster than
-        # pandas.str.extract (Python-loop re) on transcript-sized lines.
-        import pyarrow as pa
-
-        arr = pa.Array.from_pandas(s)
-        out = {}
-        for name, rx in pats.items():
-            m = pc.extract_regex(arr, pattern=rx)  # null where no match
-            out[name] = pc.struct_field(m, "g").to_pandas()
-        return pd.DataFrame(out)
-
-    # The UDF is pure, but marking it nondeterministic stops Catalyst from
-    # substituting it into filters pushed through the projection above it —
-    # which would re-evaluate the whole extraction a second time per route
-    # filter (observed as stacked ArrowEvalPython nodes). Costs nothing:
-    # every downstream predicate depends on the UDF output anyway, so no
-    # useful scan pushdown is lost.
-    return _extract.asNondeterministic()
-
-
-def parse_transcripts(
-    df: DataFrame, use_pandas_udf: bool = False, source: str = "text"
-) -> DataFrame:
+def parse_transcripts(df: DataFrame, source: str = "text") -> DataFrame:
     """parse stage: extract severity/err/tool/kv tokens from ``text`` into
     typed columns + map severity (severity_parser semantics incl. HTTP
     ranges). `text` itself is NEVER rewritten (bit-for-bit invariant).
 
-    use_pandas_udf=False → DEFAULT: pure-builtin regexp_extract inside
-    whole-stage codegen. Measured 2.2× faster than the Arrow path at
-    sf0.1 warm (0.9 s vs 2.0 s, 635,925 turns, local[32], round 4) —
-    the fixed token patterns don't need a grok engine, and staying
-    JVM-side skips the Arrow copy of the full text column AND the
-    Python worker spin-up on a cold driver run.
-    use_pandas_udf=True → one vectorized pandas UDF (single RE2 pass,
-    single ArrowEvalPython boundary) — the shape ExtractGrokPatterns
-    uses for arbitrary user patterns; kept benchmarked side by side in
-    bench.py so the crossover stays measured.
-    Both produce identical results by construction (same regexes).
+    Pure-builtin regexp_extract inside whole-stage codegen. This beat a
+    vectorized pandas UDF (pyarrow RE2, one Arrow round trip) at every
+    core count measured: 2.2× at sf0.1 / local[32] and 2× at 100k turns /
+    local[4] (BASELINE.md "Transcript parse path"). The fixed token
+    patterns need no grok engine, and staying JVM-side skips the Arrow
+    copy of the full text column and the Python worker spin-up.
     """
-    # Built as layered SELECTs, not a withColumn chain: projection collapse
-    # over a withColumn chain that re-references the UDF struct can leave
-    # TWO ArrowEvalPython nodes in the physical plan (the text parsed twice
-    # through Python). One select materializes the struct once; the next
-    # expands its fields; severity layers reference the expanded columns.
-    if use_pandas_udf:
-        extract = _token_extract_udf()
-        df = df.select("*", extract(F.col(source)).alias("_p"))
-        cols = {n: F.col(f"_p.{n}") for n in TOKEN_PATTERNS}
-    else:
-        cols = {
-            n: F.nullif(F.regexp_extract(F.col(source), p, 1), F.lit(""))
-            for n, p in TOKEN_PATTERNS.items()
-        }
-
+    cols = {
+        n: F.nullif(F.regexp_extract(F.col(source), p, 1), F.lit(""))
+        for n, p in TOKEN_PATTERNS.items()
+    }
     df = df.select(
         "*",
         cols["sev_token"].alias("sev_token"),
@@ -128,8 +68,6 @@ def parse_transcripts(
         cols["dur_ms"].cast("int").alias("dur_ms"),
         cols["nbytes"].cast("long").alias("nbytes"),
     )
-    if use_pandas_udf:
-        df = df.drop("_p")
     # severity mapping via broadcast dim join (severity_builder.go presets
     # as a lookup table). NOT the when-chain columns: those get re-inlined
     # into every downstream expression by projection collapse — the routing

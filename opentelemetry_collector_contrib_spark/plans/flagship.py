@@ -2,16 +2,18 @@
 
 Mirrors a collector logs pipeline:
   receiver (transcripts scan)
-  → transform/parse (grok-style vectorized extraction + severity mapping)
+  → transform/parse (JVM regexp_extract token extraction + severity mapping)
   → enrich (broadcast dims — k8sattributes analog)
   → routing connector (errors / tool / slow / default; both match modes)
   → exporters (per-sink partitioned writes)
-  + countconnector metrics rollup and groupbyattrs-style conversation
-    rollup (salted for the Zipf-hot conv_id).
+  + countconnector / sumconnector metrics and a groupbyattrs-style
+    conversation rollup (salted for the Zipf-hot conv_id).
 
-Every stage is a DataFrame→DataFrame function so Catalyst sees ONE plan:
-filters push into the scan, the dims broadcast, the parse UDF runs once
-per row, and the multi-sink fan-out reuses a single cached stage.
+:func:`flagship_stages` is the ONE definition of this DAG. The runner
+(plans/runner.py, jobs/run_pipeline.py), :func:`run_flagship` and
+bench.py all evaluate that stage list. Every stage is a
+DataFrame→DataFrame function, so Catalyst sees one plan per stage:
+filters push into the scan and the dims broadcast.
 """
 
 from __future__ import annotations
@@ -42,96 +44,24 @@ def build_router() -> Router:
     )
 
 
-def parsed_enriched(
-    spark: SparkSession, fixture_dir: str, use_pandas_udf: bool = False
-) -> DataFrame:
-    df = read_transcripts(spark, fixture_dir)
-    df = parse_transcripts(df, use_pandas_udf=use_pandas_udf)
+def parsed_enriched(spark: SparkSession, fixture_dir: str) -> DataFrame:
+    df = parse_transcripts(read_transcripts(spark, fixture_dir))
     roles, tools = read_dims(spark, fixture_dir)
     return enrich_transcripts(df, roles, tools)
 
 
-def flagship_stages(fixture_dir: str, use_pandas_udf: bool = False):
-    """The same DAG as :func:`run_flagship`, expressed as checkpointable
-    runner stages (plans/runner.py) for resumable spark-submit runs.
-
-    Returns (stages, source_fingerprints). Stage graph:
-      enriched ← transcripts scan + parse + broadcast-dim enrich
-      sink_* / metrics_* / conversation_rollup ← enriched checkpoint
-    A restart after e.g. the sinks committed recomputes only the
-    aggregates — the enriched checkpoint is read back, the parse UDF does
-    not run again (the fileconsumer-offset resume analog).
-    """
-    from .runner import Stage, source_fingerprint
-
-    router = build_router()
-
-    def s_enriched(spark, ctx):
-        return parsed_enriched(spark, fixture_dir, use_pandas_udf)
-
-    def sink_fn(name):
-        def fn(spark, ctx):
-            return router.split(ctx["enriched"])[name]
-
-        return fn
-
-    def s_metrics(spark, ctx):
-        tagged = router.tags_multi(ctx["enriched"]).withColumn(
-            "sink", F.explode_outer("routes")
-        )
-        return count_connector(
-            tagged,
-            dims={
-                "sink": None,
-                "severity_text": "DEFAULT",
-                "tool": "<none>",
-                "role": "<none>",
-            },
-        )
-
-    def s_durations(spark, ctx):
-        tagged = router.tags_multi(ctx["enriched"]).withColumn(
-            "sink", F.explode_outer("routes")
-        )
-        return sum_connector(
-            tagged.drop("routes"),
-            source_attribute="dur_ms",
-            dims={"sink": None, "role": "<none>"},
-            metric_name="total_dur_ms",
-        )
-
-    def s_rollup(spark, ctx):
-        return conversation_rollup(ctx["enriched"], salted=True)
-
-    stages = [Stage("enriched", s_enriched, deps=["transcripts"])]
-    for sink in [*[r.route_id for r in router.routes], "default"]:
-        stages.append(Stage(f"sink_{sink}", sink_fn(sink), deps=["enriched"]))
-    stages += [
-        Stage("metrics_counts", s_metrics, deps=["enriched"]),
-        Stage("metrics_durations", s_durations, deps=["enriched"]),
-        Stage("conversation_rollup", s_rollup, deps=["enriched"]),
-    ]
-    fps = {"transcripts": source_fingerprint(fixture_dir)}
-    return stages, fps
-
-
-def run_flagship(
-    spark: SparkSession,
-    fixture_dir: str,
-    use_pandas_udf: bool = False,
-    salted: bool = True,
-) -> dict[str, DataFrame]:
-    """Full DAG; returns every stage output (unmaterialized plans)."""
-    enriched = parsed_enriched(spark, fixture_dir, use_pandas_udf)
-    router = build_router()
-    sinks = router.split(enriched)
-
-    # countconnector: per-sink × severity × tool × role counts
-    tagged = router.tags_multi(enriched).withColumn(
+def _by_sink(df: DataFrame) -> DataFrame:
+    """One row per (row, matched route) in column ``sink``; unmatched rows
+    carry ``default`` (tags_multi semantics)."""
+    return build_router().tags_multi(df).withColumn(
         "sink", F.explode_outer("routes")
     )
-    metrics = count_connector(
-        tagged,
+
+
+def sink_counts(df: DataFrame) -> DataFrame:
+    """countconnector: log count per sink × severity × tool × role."""
+    return count_connector(
+        _by_sink(df),
         dims={
             "sink": None,
             "severity_text": "DEFAULT",
@@ -139,17 +69,73 @@ def run_flagship(
             "role": "<none>",
         },
     )
-    durations = sum_connector(
-        tagged.drop("routes"),
+
+
+def sink_durations(df: DataFrame) -> DataFrame:
+    """sumconnector: total ``dur_ms`` per sink × role."""
+    return sum_connector(
+        _by_sink(df).drop("routes"),
         source_attribute="dur_ms",
         dims={"sink": None, "role": "<none>"},
         metric_name="total_dur_ms",
     )
-    rollup = conversation_rollup(enriched, salted=salted)
-    return {
-        "enriched": enriched,
-        **{f"sink_{k}": v for k, v in sinks.items()},
-        "metrics_counts": metrics,
-        "metrics_durations": durations,
-        "conversation_rollup": rollup,
-    }
+
+
+def flagship_stages(fixture_dir: str):
+    """The flagship DAG as checkpointable runner stages (plans/runner.py)
+    for resumable spark-submit runs.
+
+    Returns (stages, source_fingerprints). Stage graph:
+      enriched ← transcripts scan + parse + broadcast-dim enrich
+      sink_* / metrics_* / conversation_rollup ← enriched checkpoint
+    A restart after e.g. the sinks committed recomputes only the
+    aggregates — the enriched checkpoint is read back, the parse does
+    not run again (the fileconsumer-offset resume analog).
+    """
+    from .runner import Stage, source_fingerprint
+
+    router = build_router()
+
+    def sink_fn(name):
+        def fn(spark, ctx):
+            return router.split(ctx["enriched"])[name]
+
+        return fn
+
+    stages = [
+        Stage(
+            "enriched",
+            lambda spark, ctx: parsed_enriched(spark, fixture_dir),
+            deps=["transcripts"],
+        )
+    ]
+    for sink in [*[r.route_id for r in router.routes], "default"]:
+        stages.append(Stage(f"sink_{sink}", sink_fn(sink), deps=["enriched"]))
+    stages += [
+        Stage(
+            "metrics_counts",
+            lambda spark, ctx: sink_counts(ctx["enriched"]),
+            deps=["enriched"],
+        ),
+        Stage(
+            "metrics_durations",
+            lambda spark, ctx: sink_durations(ctx["enriched"]),
+            deps=["enriched"],
+        ),
+        Stage(
+            "conversation_rollup",
+            lambda spark, ctx: conversation_rollup(ctx["enriched"], salted=True),
+            deps=["enriched"],
+        ),
+    ]
+    fps = {"transcripts": source_fingerprint(fixture_dir)}
+    return stages, fps
+
+
+def run_flagship(spark: SparkSession, fixture_dir: str) -> dict[str, DataFrame]:
+    """Every output of :func:`flagship_stages`, evaluated in memory without
+    checkpoints (unmaterialized plans keyed by stage name)."""
+    ctx: dict[str, DataFrame] = {}
+    for s in flagship_stages(fixture_dir)[0]:
+        ctx[s.name] = s.fn(spark, ctx)
+    return ctx

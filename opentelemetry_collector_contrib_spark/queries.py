@@ -39,7 +39,12 @@ from .operators.parse import (
 from .operators.recombine import recombine
 from .operators.redact import redact
 from .operators.route import Router
-from .plans.flagship import build_router, parsed_enriched
+from .plans.flagship import (
+    build_router,
+    parsed_enriched,
+    sink_counts,
+    sink_durations,
+)
 from .sources.readers import read_dims, read_transcripts
 
 # oracle SQL runs at the sf0.01 tier (driver contract); the env override
@@ -244,19 +249,7 @@ FROM parsed""",
 
     # ---- countconnector (connector/countconnector/counter.go:38-128)
     def t_counts(spark, sf_dir):
-        df = _parsed(spark, sf_dir)
-        tagged = build_router().tags_multi(df).withColumn(
-            "sink", F.explode_outer("routes")
-        )
-        return count_connector(
-            tagged,
-            dims={
-                "sink": None,
-                "severity_text": "DEFAULT",
-                "tool": "<none>",
-                "role": "<none>",
-            },
-        )
+        return sink_counts(_parsed(spark, sf_dir))
 
     reg(
         "t_counts",
@@ -270,14 +263,7 @@ FROM routed GROUP BY 1, 2, 3, 4""",
 
     # ---- sumconnector (connector/sumconnector/config.go:19-36)
     def t_sum_durations(spark, sf_dir):
-        df = _parsed(spark, sf_dir)
-        tagged = build_router().tags_multi(df).withColumn(
-            "sink", F.explode_outer("routes")
-        )
-        return sum_connector(
-            tagged, "dur_ms", {"sink": None, "role": "<none>"},
-            metric_name="total_dur_ms",
-        )
+        return sink_durations(_parsed(spark, sf_dir))
 
     reg(
         "t_sum_durations",
@@ -687,59 +673,12 @@ FROM {_TR}""",
     _register_round4_features(reg)
     _register_template_mining(reg)
     _register_round5_features(reg)
-    # Emission order: least-recently-driver-verified FIRST. The driver's
-    # correctness artifact samples a prefix of this dict, so through
-    # round 4 the prefix kept re-testing the same 75/150 queries while
-    # the other half never accumulated a driver row. Round-4 VERDICT #1
-    # asks for the opposite: rotate the window so every registry family
-    # gets hard driver evidence over rounds. The rule here is
-    # DETERMINISTIC and data-derived, not hand-picked: a query's sort key
-    # is (round it last appeared in a repo-root CORRECTNESS_r*.json
-    # artifact, natural registration order), never-verified = round 0.
-    # Each round's artifact feeds the next round's ordering, so the
-    # window walks the whole registry. Full same-session coverage of ALL
-    # entries remains tools/check_correctness.py (150/150 gate).
-    order = _driver_rotation_order(list(queries))
-    queries = {k: queries[k] for k in order}
-    oracles = {k: oracles[k] for k in order if k in oracles}
     return queries, oracles
-
-
-def _driver_rotation_order(names: list[str]) -> list[str]:
-    """Stable sort of registry keys by last-driver-verified round.
-
-    Reads CORRECTNESS_r*.json artifacts at the repo root (written by the
-    external driver, not this repo); queries absent from every artifact
-    sort first in natural registration order. Robust to missing or
-    malformed artifacts (falls back to natural order).
-    """
-    import glob
-    import json
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    last_round: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as fh:
-                artifact = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(artifact, dict):
-            continue
-        for name in artifact:
-            last_round[name] = max(last_round.get(name, 0), rnd)
-    natural = {name: i for i, name in enumerate(names)}
-    return sorted(names, key=lambda n: (last_round.get(n, 0), natural[n]))
 
 
 def _register_round4_features(reg) -> None:
     """Oracle gates for the round-4 additions, appended at the registry
-    tail = their true build order (window untouched)."""
+    tail = their true build order."""
     from .operators.filter import include_exclude_gate
     from .ottl.compiler import compile_routing_statement
 
@@ -3691,7 +3630,7 @@ FROM events""",
            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS gid
   FROM {_TR}
 )
-SELECT conv_id, gid AS group_id, count(*)::BIGINT AS n_parts,
+SELECT conv_id, gid::BIGINT AS group_id, count(*)::BIGINT AS n_parts,
        string_agg(text, chr(10) ORDER BY turn_idx) AS chunk_text
 FROM marked GROUP BY conv_id, gid""",
     )
@@ -5206,10 +5145,7 @@ FROM q, tot GROUP BY cell, tot.n""",
 
 def _register_round5_features(reg) -> None:
     """Round-5 additions, appended at the registry tail = their true
-    build order (same precedent as the round-4 block): under the
-    least-recently-verified rotation they queue BEHIND the existing
-    never-driver-tested backlog, so the documented round-5 window is
-    untouched and these surface in the round-6 window."""
+    build order (same precedent as the round-4 block)."""
 
     # ---- d_bm25_topk: Okapi BM25 top-k retrieval --------------------------
     # quality-targeted corpus selection: score every document against a

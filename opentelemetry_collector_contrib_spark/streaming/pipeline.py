@@ -43,14 +43,13 @@ def parsed_enriched_stream(
     spark: SparkSession,
     input_dir: str,
     dims_dir: str,
-    use_pandas_udf: bool = False,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """parse + broadcast-dim enrich on a stream — identical operator code
     to the batch path; dims stay batch DataFrames (stream-static join,
     broadcast on the static side)."""
     stream = read_transcripts_stream(spark, input_dir, max_files_per_trigger)
-    parsed = parse_transcripts(stream, use_pandas_udf=use_pandas_udf)
+    parsed = parse_transcripts(stream)
     roles, tools = read_dims(spark, dims_dir)
     return enrich_transcripts(parsed, roles, tools)
 
@@ -62,16 +61,16 @@ def streaming_flagship(
     out_dir: str,
     checkpoint_dir: str,
     available_now: bool = True,
-    use_pandas_udf: bool = False,
     max_files_per_trigger: int | None = None,
 ):
     """End-to-end streaming job: parse → enrich → routed fan-out sinks.
 
-    foreachBatch applies the batch Router to every micro-batch — one pass,
-    tag + partitionBy(route) write — so routed-row sets are byte-identical
-    to the batch engine on the same input (verified in tests). Returns the
-    StreamingQuery; with available_now the query drains all current input
-    and stops (deterministic for tests), otherwise it runs continuously.
+    foreachBatch applies the batch Router's ``write_routed`` to every
+    micro-batch — one pass, tag + partitionBy(route) write — so routed-row
+    sets are byte-identical to the batch engine on the same input
+    (verified in tests). Returns the StreamingQuery; with available_now
+    the query drains all current input and stops (deterministic for
+    tests), otherwise it runs continuously.
 
     Exactly-once: foreachBatch is at-least-once (a crash between sink
     write and checkpoint commit replays the micro-batch), so each batch
@@ -83,23 +82,13 @@ def streaming_flagship(
     from ..plans.flagship import build_router
 
     enriched = parsed_enriched_stream(
-        spark, input_dir, dims_dir, use_pandas_udf, max_files_per_trigger
+        spark, input_dir, dims_dir, max_files_per_trigger
     )
     router = build_router()
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if router.match_once:
-            tagged = router.tag(batch_df)
-        else:
-            tagged = (
-                router.tags_multi(batch_df)
-                .withColumn("route", F.explode_outer("routes"))
-                .drop("routes")
-            )
-        (
-            tagged.write.mode("overwrite")
-            .partitionBy("route")
-            .parquet(os.path.join(out_dir, "sinks", f"batch_id={batch_id}"))
+        router.write_routed(
+            batch_df, os.path.join(out_dir, "sinks", f"batch_id={batch_id}")
         )
 
     writer = (

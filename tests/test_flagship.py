@@ -8,11 +8,17 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_contrib_spark import oracle
-from opentelemetry_collector_contrib_spark.plans.flagship import run_flagship
+from opentelemetry_collector_contrib_spark.operators.group import (
+    conversation_rollup,
+)
+from opentelemetry_collector_contrib_spark.plans.flagship import (
+    parsed_enriched,
+    run_flagship,
+)
 
 
-def _spark_outputs(spark, sf_dir, **kw):
-    return run_flagship(spark, sf_dir, **kw)
+def _spark_outputs(spark, sf_dir):
+    return run_flagship(spark, sf_dir)
 
 
 def test_routed_row_sets_match_oracle(spark, sf_dir):
@@ -40,7 +46,7 @@ def test_counts_match_oracle(spark, sf_dir):
 
 def test_text_byte_equality_under_stable_order(spark, sf_dir):
     """Spark must reproduce the raw text bit-for-bit under the
-    (conv_id, turn_idx) window ordering — never altered by the parse UDF."""
+    (conv_id, turn_idx) window ordering — never altered by the parse."""
     ora = oracle.run_oracle(sf_dir)
     expected = (
         ora["enriched"]
@@ -58,19 +64,10 @@ def test_text_byte_equality_under_stable_order(spark, sf_dir):
     assert got == expected
 
 
-def test_builtin_and_udf_parse_paths_agree(spark, sf_dir):
-    a = _spark_outputs(spark, sf_dir, use_pandas_udf=True)["enriched"]
-    b = _spark_outputs(spark, sf_dir, use_pandas_udf=False)["enriched"]
-    cols = ["conv_id", "turn_idx", "sev_token", "err_code", "tool_name",
-            "call_id", "dur_ms", "nbytes", "severity_text", "severity_number"]
-    pa = a.select(cols).orderBy("conv_id", "turn_idx").toPandas()
-    pb = b.select(cols).orderBy("conv_id", "turn_idx").toPandas()
-    pd.testing.assert_frame_equal(pa, pb)
-
-
 def test_salted_rollup_equals_plain(spark, sf_dir):
-    salted = run_flagship(spark, sf_dir, salted=True)["conversation_rollup"]
-    plain = run_flagship(spark, sf_dir, salted=False)["conversation_rollup"]
+    enriched = parsed_enriched(spark, sf_dir)
+    salted = conversation_rollup(enriched, salted=True)
+    plain = conversation_rollup(enriched, salted=False)
     cols = ["conv_id", "n_turns", "n_errors", "total_dur_ms", "max_severity"]
     ps = salted.select(cols).orderBy("conv_id").toPandas()
     pp = plain.select(cols).orderBy("conv_id").toPandas()

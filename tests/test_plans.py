@@ -13,6 +13,7 @@ import os
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_contrib_spark.fixtures import ensure_fixture_dir
+from opentelemetry_collector_contrib_spark.functions.grok import GrokPattern
 from opentelemetry_collector_contrib_spark.operators.enrich import (
     enrich_transcripts,
 )
@@ -21,6 +22,7 @@ from opentelemetry_collector_contrib_spark.operators.group import (
 )
 from opentelemetry_collector_contrib_spark.operators.parse import (
     parse_transcripts,
+    regex_parser,
 )
 from opentelemetry_collector_contrib_spark.sources.readers import (
     read_dims,
@@ -54,12 +56,16 @@ def test_parse_stage_default_is_codegen_only(spark):
     assert "regexp_extract" in plan
 
 
+# a multi-group named-capture pattern over the transcript tokens: the
+# grok engine (functions/grok.py) is the only user-pattern parse path
+_TOKEN_RX = r"level=(?P<lvl>\S+).*?dur_ms=(?P<dur>\d+)"
+
+
 def test_parse_stage_single_python_boundary(spark):
-    """The grok-engine (UDF) parse path is ONE ArrowEvalPython node — a
-    second one means the text crosses the Python boundary twice per
-    pass."""
-    df = parse_transcripts(read_transcripts(spark, _fx()),
-                           use_pandas_udf=True)
+    """The grok-engine (UDF) parse is ONE ArrowEvalPython node for all
+    named groups — a second one means the text crosses the Python
+    boundary twice per pass."""
+    df = regex_parser(read_transcripts(spark, _fx()), "text", _TOKEN_RX)
     plan = _plan(df, mode="simple")
     assert plan.count("ArrowEvalPython") == 1
 
@@ -100,14 +106,12 @@ def test_filter_pushed_to_parquet_scan(spark):
 
 
 def test_parse_filter_not_pushed_past_udf(spark):
-    """Filters on UDF outputs must NOT re-trigger the extraction: the
-    nondeterministic marking keeps one ArrowEvalPython even under a
+    """Filters on grok UDF outputs must NOT re-trigger the extraction:
+    the nondeterministic marking keeps one ArrowEvalPython even under a
     downstream filter + projection."""
-    df = parse_transcripts(read_transcripts(spark, _fx()),
-                           use_pandas_udf=True)
-    q = df.filter(F.col("severity_number") >= 17).select(
-        "conv_id", "err_code"
-    )
+    g = GrokPattern(_TOKEN_RX)
+    df = g.apply(read_transcripts(spark, _fx()), "text")
+    q = df.filter(F.col("lvl") == "ERROR").select("conv_id", "dur")
     assert _plan(q, mode="simple").count("ArrowEvalPython") == 1
 
 

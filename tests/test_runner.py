@@ -49,12 +49,38 @@ def test_runner_resume_and_lineage(spark, sf_dir, tmp_path):
     assert set(r2.skipped) == {s.name for s in stages}
     assert out2["metrics_counts"].count() == out1["metrics_counts"].count()
 
-    # checkpointed results match a direct (uncheckpointed) run
+    # every checkpointed output matches a direct (uncheckpointed) run,
+    # order-insensitive (rows sorted by repr: columns hold NULLs)
+    def rows(df, cols):
+        return sorted(map(tuple, df.select(*cols).collect()), key=repr)
+
     direct = run_flagship(spark, sf_dir)
-    assert (
-        sorted(map(tuple, out2["metrics_counts"].collect()))
-        == sorted(map(tuple, direct["metrics_counts"].collect()))
+    assert set(direct) == set(out2)
+    for name, df in direct.items():
+        assert rows(out2[name], df.columns) == rows(df, df.columns), name
+
+
+def test_run_pipeline_cli_resumes(spark, sf_dir, tmp_path, capsys):
+    """jobs/run_pipeline.py twice with one checkpoint dir: the second run
+    resumes every stage from its checkpoint and computes none."""
+    import importlib.util
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "jobs", "run_pipeline.py",
     )
+    spec = importlib.util.spec_from_file_location("run_pipeline", path)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    argv = ["--input", sf_dir, "--checkpoint-dir", str(tmp_path / "ckpt")]
+    names = [s.name for s in flagship_stages(sf_dir)[0]]
+
+    assert job.main(argv) == 0
+    assert f"computed: {names}" in capsys.readouterr().out
+    assert job.main(argv) == 0
+    out = capsys.readouterr().out
+    assert "computed: []" in out
+    assert f"skipped (resumed from checkpoint): {names}" in out
 
 
 def test_runner_recomputes_on_input_change(spark, tmp_path):
