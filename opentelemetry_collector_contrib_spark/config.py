@@ -75,9 +75,11 @@ user configured would corrupt their pipeline semantics.
 from __future__ import annotations
 
 import os
+from collections import Counter
 from functools import reduce
 from typing import Any
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -854,7 +856,14 @@ _PROCESSORS = {
 class CollectorConfig:
     """Compiled collector-style config. ``build(spark)`` returns
     {exporter_name: DataFrame}; ``run(spark)`` additionally writes the
-    file exporters (one partitioned write each) and returns the same map."""
+    file exporters (one write each) and returns the same map.
+
+    Like the collector's fan-out consumers, every fan-out point is
+    evaluated once: a receiver, pipeline or connector output that more
+    than one downstream plan reads (``_fanout``) is materialized by the
+    first exporter job and read back by the rest, instead of each
+    re-running scan, parse and processors. A frame with a single reader
+    stays lazy and keeps its pushdown and broadcast plans."""
 
     def __init__(self, cfg: str | dict):
         self.cfg = load_config(cfg)
@@ -894,6 +903,43 @@ class CollectorConfig:
     def _is_connector(self, name: str) -> bool:
         return name in (self.cfg.get("connectors") or {})
 
+    def _is_router(self, name: str) -> bool:
+        return self._is_connector(name) and _base_type(name) == "routing"
+
+    def _fanout(self) -> tuple[Counter, Counter]:
+        """Downstream plans reading each fan-out point, as two counters:
+        receiver or connector name → readers of its output, and pipeline
+        name → readers of its processed output.
+
+        A receiver or non-routing connector is read once per pipeline
+        listing it. A routing connector reads its input once per table
+        edge (entry or default → a pipeline receiving from it), since
+        ``_route`` gives each edge its own filter over that input. A
+        pipeline's output is read once per concrete exporter or
+        non-routing connector, and once per edge of each routing
+        connector it exports to."""
+        inputs: Counter = Counter()
+        for pcfg in self.pipelines.values():
+            for r in pcfg.get("receivers", []) or []:
+                if not self._is_router(r):
+                    inputs[r] += 1
+        for conn in self.cfg.get("connectors") or {}:
+            if not self._is_router(conn):
+                continue
+            ccfg = self._component("connectors", conn)
+            feeds = [p for entry in ccfg.get("table", [])
+                     for p in entry.get("pipelines", [])]
+            feeds += ccfg.get("default_pipelines", []) or []
+            inputs[conn] = sum(
+                conn in ((self.pipelines.get(p) or {}).get("receivers") or [])
+                for p in feeds
+            )
+        outputs: Counter = Counter()
+        for pname, pcfg in self.pipelines.items():
+            for e in pcfg.get("exporters", []) or []:
+                outputs[pname] += inputs[e] if self._is_router(e) else 1
+        return inputs, outputs
+
     # -- build --------------------------------------------------------------
 
     def build(
@@ -906,14 +952,50 @@ class CollectorConfig:
         ``sources`` optionally substitutes a pre-read raw DataFrame for a
         receiver's own scan (keyed by receiver name) — the hook
         ``run_streaming`` uses to push each micro-batch through the SAME
-        assembly the batch path runs."""
+        assembly the batch path runs.
+
+        A fan-out point with several readers (``_fanout``) becomes a lazy
+        local checkpoint: its rows are computed by the first job that
+        reads it and kept for the rest, and its blocks are freed once no
+        returned frame references it. Planning the checkpoint runs only
+        the broadcasts and shuffle stages below it; every row-level
+        operator stays lazy."""
         sources = sources or {}
+        in_readers, out_readers = self._fanout()
+        shared: list[DataFrame] = []
+
+        def share(df: DataFrame, readers: int) -> DataFrame:
+            # serialized MEMORY_AND_DISK: the JVM's default for a local
+            # checkpoint is deserialized, which took more peak memory at
+            # the same speed (BASELINE.md "Collector fan-out")
+            if readers < 2 or any(df is s for s in shared):
+                return df
+            df = df.localCheckpoint(
+                eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
+            )
+            shared.append(df)
+            return df
+
         # pass 1: run every pipeline whose receivers are all concrete
         # (non-connector); stash per-connector inputs
         conn_inputs: dict[str, list[DataFrame]] = {}
         routed: dict[str, dict[str, DataFrame]] = {}  # conn → pipeline → df
+        received: dict[str, DataFrame] = {}  # receiver → df
         outputs: dict[str, DataFrame] = {}
         pending = dict(self.pipelines)
+
+        def receive(r: str) -> DataFrame:
+            if r not in received:
+                fn = _RECEIVERS.get(_base_type(r))
+                if fn is None:
+                    raise ConfigError(f"unsupported receiver {r!r}")
+                comp = self._component("receivers", r)
+                d = fn(spark, comp, sources.get(r))
+                # stanza operator chain attached to the receiver
+                # (filelog-style `operators:` list)
+                d = _apply_stanza_operators(d, comp.get("operators"))
+                received[r] = share(d, in_readers[r])
+            return received[r]
 
         def run_pipeline(pname: str, pcfg: dict, source: DataFrame) -> None:
             df = source
@@ -922,6 +1004,7 @@ class CollectorConfig:
                 if fn is None:
                     raise ConfigError(f"unsupported processor {proc!r}")
                 df = fn(df, self._component("processors", proc))
+            df = share(df, out_readers[pname])
             for exp in pcfg.get("exporters", []) or []:
                 if self._is_connector(exp):
                     conn_inputs.setdefault(exp, []).append(df)
@@ -933,16 +1016,7 @@ class CollectorConfig:
             rxs = pcfg.get("receivers", []) or []
             if any(self._is_connector(r) for r in rxs):
                 continue
-            dfs = []
-            for r in rxs:
-                fn = _RECEIVERS.get(_base_type(r))
-                if fn is None:
-                    raise ConfigError(f"unsupported receiver {r!r}")
-                comp = self._component("receivers", r)
-                d = fn(spark, comp, sources.get(r))
-                # stanza operator chain attached to the receiver
-                # (filelog-style `operators:` list)
-                dfs.append(_apply_stanza_operators(d, comp.get("operators")))
+            dfs = [receive(r) for r in rxs]
             src = dfs[0]
             for d in dfs[1:]:
                 src = src.unionByName(d, allowMissingColumns=True)
@@ -1008,6 +1082,8 @@ class CollectorConfig:
                 routed[conn] = {"*": src}
             else:
                 raise ConfigError(f"unsupported connector {conn!r}")
+            if base != "routing":
+                routed[conn]["*"] = share(routed[conn]["*"], in_readers[conn])
 
         # pass 3: pipelines fed by connectors
         for pname, pcfg in pending.items():
@@ -1099,6 +1175,11 @@ class CollectorConfig:
         return w
 
     def run(self, spark: SparkSession) -> dict[str, Any]:
+        """Write every file/otlpjsonfile exporter (one Spark job each);
+        return {exporter: path} for those and {exporter: DataFrame} for
+        debug/noop. The first job that reads a shared fan-out point
+        (``build``) materializes it; later jobs and the returned
+        DataFrames read the stored rows."""
         outputs = self.build(spark)
         written = {}
         for exp, df in outputs.items():
@@ -1142,6 +1223,11 @@ class CollectorConfig:
         directories with mode=overwrite — a foreachBatch replay after a
         crash overwrites its own previous output instead of appending
         duplicates (checkpointLocation + idempotent writes).
+
+        Each micro-batch is one multi-sink ``foreachBatch``: build()
+        shares its fan-out points exactly as in ``run``, so the batch's
+        rows are parsed and processed once however many file exporters
+        the batch feeds.
 
         v1 scope: exactly ONE concrete receiver (the usual collector
         topology — one filelog receiver feeding a pipeline DAG); any

@@ -14,10 +14,12 @@ config.go:22-45,71-81). Semantics reproduced exactly:
   (logs.go:86-92) — here conditions are Column exprs, so "error" means
   NULL-valued predicate, coalesced to false.
 
-Spark-first: the upstream DF is evaluated once; each sink is a filter on
-a cheap route-tag column. With match_once the tag is a single CASE WHEN
-(one pass, then a partitioned write fans out without re-reading);
-with multi-match each route filter is independent over the cached stage.
+Two sink shapes. ``write_routed`` is the one-pass path: it tags each
+row (a single CASE WHEN with match_once, an exploded tag array with
+multi-match) and fans out with one partitioned write. ``split`` returns
+one filtered DataFrame per route; each re-evaluates ``df`` unless the
+caller materializes it first, as ``CollectorConfig`` does for every
+routing input that feeds more than one pipeline.
 """
 
 from __future__ import annotations
@@ -70,8 +72,10 @@ class Router:
         match_once: single tag column, per-route filter on it.
         multi-match: per-route independent filters (a row can appear in
         several outputs — the duplication semantics of logs.go:74-97).
-        Callers should .persist() df before writing many sinks, or use
-        write_routed() which does one pass via explode+partitionBy.
+        Nothing is cached here: each output re-reads ``df``. Writing
+        several outputs from one evaluation takes either a materialized
+        ``df`` (``CollectorConfig`` local-checkpoints it) or
+        write_routed(), which does one pass via explode+partitionBy.
         """
         out: dict[str, DataFrame] = {}
         if self.match_once:

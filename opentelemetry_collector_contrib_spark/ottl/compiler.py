@@ -301,12 +301,13 @@ class Context:
                     nil = nil | (variant_kind(value) != F.lit(KIND_STR))
             else:
                 nil = value.isNull()
-            new = value
+            # func_set.go: a nil value never reaches the setter — the
+            # statement is a no-op, the old value stays; a column that
+            # does not exist yet stays NULL wherever the statement skips
+            guard = (~nil) if cond is None else (cond & ~nil)
+            new = F.when(guard, value)
             if col in df.columns:
-                # func_set.go: a nil value never reaches the setter —
-                # the statement is a no-op, the old value stays
-                guard = (~nil) if cond is None else (cond & ~nil)
-                new = F.when(guard, value).otherwise(F.col(col))
+                new = new.otherwise(F.col(col))
             return df.withColumn(col, new)
         if any(isinstance(k, int) and k < 0 for k in keys):
             raise OTTLError("negative slice index")

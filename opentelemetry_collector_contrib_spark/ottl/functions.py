@@ -470,7 +470,8 @@ _UA_RULES = [
     ("httpx", r"^python-httpx/", r"^python-httpx/([0-9.]+)"),
     ("libwww-perl", r"^libwww-perl/", r"^libwww-perl/([0-9.]+)"),
     ("PHP", r"^PHP/", r"^PHP/([0-9.]+)"),
-    ("Guzzle", r"^GuzzleHttp/", r"^GuzzleHttp/([0-9.]+)"),
+    # uap-core family name; unanchored so a prefixed GuzzleHttp/ matches
+    ("Guzzle", r"GuzzleHttp/", r"GuzzleHttp/([0-9.]+)"),
     ("WordPress", r"^WordPress/", r"^WordPress/([0-9.]+)"),
     ("Dart", r"^Dart/", r"^Dart/([0-9.]+)"),
     ("Scrapy", r"^Scrapy/", r"^Scrapy/([0-9.]+)"),
@@ -489,14 +490,6 @@ _UA_RULES = [
     ("Google-HTTP-Java-Client", r"^Google-HTTP-Java-Client/",
      r"^Google-HTTP-Java-Client/([0-9.]+)"),
     ("insomnia", r"^insomnia/", r"^insomnia/([0-9.]+)"),
-    ("libwww-perl", r"^libwww-perl/", r"^libwww-perl/([0-9.]+)"),
-    ("GuzzleHttp", r"GuzzleHttp/", r"GuzzleHttp/([0-9.]+)"),
-    ("Scrapy", r"^Scrapy/", r"^Scrapy/([0-9.]+)"),
-    ("Faraday", r"^Faraday v", r"^Faraday v([0-9.]+)"),
-    ("Ruby", r"^Ruby\b", r"^Ruby/?([0-9.]*)"),
-    ("PHP", r"^PHP/", r"^PHP/([0-9.]+)"),
-    ("Dart", r"^Dart/", r"^Dart/([0-9.]+)"),
-    ("HTTPie", r"^HTTPie/", r"^HTTPie/([0-9.]+)"),
     # -- embedded / headless --
     ("HeadlessChrome", r"HeadlessChrome/", r"HeadlessChrome/([0-9.]+)"),
     ("Electron", r"Electron/", r"Electron/([0-9.]+)"),

@@ -1093,3 +1093,115 @@ def test_transform_processor_round5_grammar(spark, tmp_path):
     assert got == {"sev": "ERROR", "pair": {"n": 17}}
     assert rows["a"]["keys"] == "2"
     assert _json.loads(rows["b"]["ctx"])["pair"]["n"] == 9
+
+
+def _fanout_config(shape: str) -> dict:
+    """Multi-reader configs over the transcripts receiver, every exporter
+    a noop: ``collector`` is perfbench/collector.yaml's layout (logs/in →
+    routing to four pipelines + count + sum); ``routing`` is a routing-only
+    logs/in with three target pipelines; ``receiver`` is one receiver
+    listed by two pipelines; ``forward`` is logs/in → a forward connector
+    listed by two pipelines."""
+    def sink(name):
+        return {"receivers": ["routing"], "exporters": [f"noop/{name}"]}
+
+    routing = {
+        "match_once": False,
+        "default_pipelines": ["logs/default"],
+        "table": [
+            {"condition": "severity_number >= SEVERITY_NUMBER_ERROR",
+             "pipelines": ["logs/errors"]},
+            {"condition": 'tool_name == "bash"', "pipelines": ["logs/tools"]},
+        ],
+    }
+    cfg = {
+        "receivers": {"transcripts": {"path": "unused"}},
+        "processors": {"filter/drop_system": {"logs": {"log_conditions": [
+            'attributes["role"] == "system"']}}},
+        "connectors": {"routing": routing},
+        "exporters": {f"noop/{n}": {} for n in (
+            "errors", "tools", "slow", "default", "metrics", "a", "b")},
+        "service": {"pipelines": {
+            "logs/in": {"receivers": ["transcripts"],
+                        "processors": ["filter/drop_system"],
+                        "exporters": ["routing"]},
+            "logs/errors": sink("errors"),
+            "logs/tools": sink("tools"),
+            "logs/default": sink("default"),
+        }},
+    }
+    pipelines = cfg["service"]["pipelines"]
+    if shape == "collector":
+        routing["table"].append(
+            {"condition": "dur_ms > 4000", "pipelines": ["logs/slow"]})
+        pipelines["logs/slow"] = sink("slow")
+        cfg["connectors"]["count/by_sev"] = {"dims": ["severity_text"]}
+        cfg["connectors"]["sum/dur"] = {
+            "source_attribute": "dur_ms", "dims": ["tool_name"]}
+        pipelines["logs/in"]["exporters"] += ["count/by_sev", "sum/dur"]
+        pipelines["logs/metrics"] = {"receivers": ["count/by_sev", "sum/dur"],
+                                     "exporters": ["noop/metrics"]}
+    elif shape == "forward":
+        cfg["connectors"] = {"forward": {}}
+        pipelines["logs/in"]["exporters"] = ["forward"]
+        cfg["service"]["pipelines"] = {
+            "logs/in": pipelines["logs/in"],
+            "logs/a": {"receivers": ["forward"], "exporters": ["noop/a"]},
+            "logs/b": {"receivers": ["forward"], "exporters": ["noop/b"]},
+        }
+    elif shape == "receiver":
+        del cfg["connectors"]
+        cfg["service"]["pipelines"] = {
+            "logs/a": {"receivers": ["transcripts"], "exporters": ["noop/a"]},
+            "logs/b": {"receivers": ["transcripts"],
+                       "processors": ["filter/drop_system"],
+                       "exporters": ["noop/b"]},
+        }
+    return cfg
+
+
+@pytest.mark.parametrize("shape,readers", [
+    ("collector", {"routing": 4, "logs/in": 6}),
+    ("routing", {"routing": 3, "logs/in": 3}),
+    ("receiver", {"transcripts": 2}),
+    ("forward", {"forward": 2}),
+])
+def test_fanout_reader_counts(shape, readers):
+    """A routing connector reads its input once per target pipeline, so
+    logs/in's output has one reader per routing target plus one each for
+    count and sum; a receiver or forward connector has one reader per
+    pipeline listing it; no other point has more than one reader."""
+    in_readers, out_readers = CollectorConfig(_fanout_config(shape))._fanout()
+    shared = {k: v for k, v in {**in_readers, **out_readers}.items() if v > 1}
+    assert shared == readers
+
+
+@pytest.mark.parametrize("shape",
+                         ["collector", "routing", "receiver", "forward"])
+def test_fanout_evaluated_once(spark, shape):
+    """Each fan-out point is evaluated once: producing every output of a
+    multi-reader config runs the receiver over each input row exactly
+    once, not once per downstream reader (the collector's fan-out
+    consumers hand the same records to every reader)."""
+    from opentelemetry_collector_contrib_spark.sources.readers import (
+        read_transcripts,
+    )
+
+    raw = read_transcripts(spark, ensure_fixture_dir("sf0.001"))
+    n = raw.count()
+    acc = spark.sparkContext.accumulator(0)
+
+    # nondeterministic, so the optimizer neither duplicates the call into
+    # a pushed-down filter nor re-evaluates it above one
+    @F.udf("string")
+    def tick(text):
+        acc.add(1)
+        return text
+
+    tick = tick.asNondeterministic()
+    outputs = CollectorConfig(_fanout_config(shape)).build(
+        spark, sources={"transcripts": raw.withColumn("text", tick("text"))}
+    )
+    for df in outputs.values():
+        df.write.format("noop").mode("overwrite").save()
+    assert acc.value == n

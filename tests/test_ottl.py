@@ -487,6 +487,21 @@ def test_set_nil_is_noop_not_delete(log_df):
     assert out3["body"] == ROW["body"]
 
 
+def test_set_runtime_nil_and_where_on_absent_column(spark):
+    """func_set.go `if val != nil`: a value that is nil at runtime leaves
+    an existing target intact, and a false where clause writes nothing,
+    also when the target column does not exist yet."""
+    df = spark.createDataFrame([({"a": "keep"},)],
+                               "attributes map<string,string>")
+    out = one(compile_statement(
+        'set(attributes["a"], attributes["missing"])')(df))
+    assert out["attributes"] == {"a": "keep"}
+    ctx = Context(path_map={"extra": "extra"})
+    for stmt in ('set(extra, "x") where false',
+                 'set(extra, attributes["missing"])'):
+        assert one(compile_statement(stmt, ctx)(df))["extra"] is None, stmt
+
+
 def test_deep_map_set_three_keys(log_df):
     """set deeper than 2 keys rebuilds every erased level (map.go
     SetMapValue traverses arbitrarily; round-3 capped at 2)."""
