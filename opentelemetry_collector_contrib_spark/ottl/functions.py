@@ -842,7 +842,11 @@ def _parse_key_value(args, ctx):
     d1 = str(literal_arg(args[1])) if len(args) > 1 else "="
     d2 = str(literal_arg(args[2])) if len(args) > 2 else " "
     e1, e2 = _re.escape(d1), _re.escape(d2)
-    rx = f'(?:^|{e2})([^{e1}{e2}]+){e1}("[^"]*"|[^{e2}]*)'
+    # a key runs up to the first delimiter of either kind and an unquoted
+    # value up to the next pair delimiter; lookaheads, not character
+    # classes, so a multi-character delimiter matches only as a whole
+    key = f"(?:(?!{e1}|{e2}).)+"
+    rx = f'(?s)(?:^|{e2})({key}){e1}("[^"]*"|(?:(?!{e2}).)*)'
     pairs = F.regexp_extract_all(c, F.lit(rx), F.lit(0))
 
     def entry(p):

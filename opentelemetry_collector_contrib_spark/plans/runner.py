@@ -7,7 +7,7 @@ storage extension so a restart resumes where ingest stopped
 (pkg/stanza/fileconsumer/internal/checkpoint/checkpoint.go:20-45,
 pkg/stanza/adapter/storage.go:14-33). Our unit of progress is a *stage*,
 not a byte offset: each stage's output DataFrame is materialized to a
-checkpoint table, and a `_pipeline_state` record commits (stage name,
+parquet checkpoint, and a `_pipeline_state` record commits (stage name,
 input fingerprint, per-output-file row counts = partition lineage, row
 count, wall seconds). A rerun skips every stage whose committed state
 matches the current input fingerprint and replays downstream stages from
@@ -15,19 +15,25 @@ the checkpointed parquet instead of recomputing upstream.
 
 Fingerprints play the role of Iceberg snapshot IDs: a source fingerprint
 hashes the file listing (relative path, size, mtime); a stage fingerprint
-hashes (stage name, its code-version tag, upstream fingerprints). On a
-cluster with an Iceberg catalog the checkpoint format string becomes
-"iceberg" and fingerprints become real snapshot IDs — the control flow is
-unchanged (the state record is engine-agnostic JSON either way).
+hashes (stage name, its code-version tag, upstream fingerprints). With an
+Iceberg catalog, fingerprints would become real snapshot IDs and the
+lineage would come from the snapshot's data-file manifest; the control
+flow is unchanged (the state record is engine-agnostic JSON either way).
+
+Scheduling: stages form a DAG through ``deps``. Each stage starts on a
+worker thread as soon as every stage it depends on has committed, so the
+fan-out below one root (the flagship's sinks and aggregates all read
+``enriched``) runs as concurrent Spark jobs. The worker threads inherit
+the caller's job group, job tags and local properties.
 
 Atomicity: parquet checkpoint is written first (Spark's own _SUCCESS
 commit protocol), then the state JSON lands via tmp-file + os.replace —
 a crash between the two re-runs the stage, never serves half a table.
 
 Scale notes: state records are O(stages), not O(rows) — driver-side JSON
-is fine at any data scale. Lineage per-file row counts come from Spark's
-own write metrics path (a groupBy over input_file_name() on the
-checkpoint read-back, one cheap metadata-sized job per stage).
+is fine at any data scale. Lineage per-file row counts are read
+in-process from the footers of the part files the write just produced;
+no Spark job reads the checkpoint back.
 """
 
 from __future__ import annotations
@@ -36,11 +42,14 @@ import hashlib
 import json
 import os
 import time
-from collections.abc import Callable
+from collections.abc import Callable, Mapping
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
+from types import MappingProxyType
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 STATE_DIR = "_pipeline_state"
 
@@ -64,18 +73,35 @@ def source_fingerprint(path: str) -> str:
     return h.hexdigest()[:16]
 
 
+def footer_lineage(ckpt: str) -> list[dict]:
+    """Per-file row counts of a parquet checkpoint, read from the part
+    files' footers in-process (no Spark job). Zero-row files are left
+    out, as a ``groupBy(input_file_name())`` over the checkpoint would."""
+    lineage = []
+    for name in sorted(os.listdir(ckpt)):
+        if not name.startswith((".", "_")):
+            rows = pq.read_metadata(os.path.join(ckpt, name)).num_rows
+            if rows:
+                lineage.append({"file": name, "rows": rows})
+    return lineage
+
+
 @dataclass
 class Stage:
     """One pipeline stage.
 
-    ``fn(spark, ctx) -> DataFrame`` where ctx maps upstream stage names →
-    their (possibly checkpoint-loaded) DataFrames. ``deps`` names the
-    upstream stages whose fingerprints feed this stage's fingerprint.
-    ``version`` bumps the fingerprint when stage code changes semantics.
+    ``fn(spark, ctx) -> DataFrame`` where ctx is a read-only mapping of
+    upstream stage names → their committed, checkpoint-backed DataFrames.
+    ``fn`` may read only ``ctx[d]`` for ``d`` in ``deps``: the runner
+    starts a stage as soon as those stages have committed, possibly while
+    unrelated stages are still running. ``deps`` may also name external
+    sources (keys of the runner's ``source_fingerprints``); those feed the
+    fingerprint but do not wait for anything. ``version`` bumps the
+    fingerprint when stage code changes semantics.
     """
 
     name: str
-    fn: Callable[[SparkSession, dict[str, DataFrame]], DataFrame]
+    fn: Callable[[SparkSession, Mapping[str, DataFrame]], DataFrame]
     deps: list[str] = field(default_factory=list)
     version: str = "1"
     # (key, n_buckets): checkpoint this stage BUCKETED by key — pays the
@@ -87,15 +113,9 @@ class Stage:
 
 
 class PipelineRunner:
-    def __init__(
-        self,
-        spark: SparkSession,
-        checkpoint_root: str,
-        fmt: str = "parquet",
-    ) -> None:
+    def __init__(self, spark: SparkSession, checkpoint_root: str) -> None:
         self.spark = spark
         self.root = checkpoint_root
-        self.fmt = fmt
         os.makedirs(os.path.join(self.root, STATE_DIR), exist_ok=True)
         # observability for tests & logs: which stages actually computed
         self.computed: list[str] = []
@@ -131,16 +151,16 @@ class PipelineRunner:
         in-memory catalog is empty, so re-register the external table
         from the checkpoint's own schema first."""
         if stage.bucket_by is None:
-            return self.spark.read.format(self.fmt).load(ckpt)
+            return self.spark.read.parquet(ckpt)
         tbl = self._ckpt_table(stage.name)
         if not self.spark.catalog.tableExists(tbl):
             key, n = stage.bucket_by
-            ddl = self.spark.read.format(self.fmt).load(ckpt).schema.toDDL()
+            ddl = self.spark.read.parquet(ckpt).schema.toDDL()
             sorted_by = (
                 f"SORTED BY ({', '.join(stage.sort_by)}) " if stage.sort_by else ""
             )
             self.spark.sql(
-                f"CREATE TABLE {tbl} ({ddl}) USING {self.fmt} "
+                f"CREATE TABLE {tbl} ({ddl}) USING parquet "
                 f"CLUSTERED BY ({key}) {sorted_by}INTO {n} BUCKETS "
                 f"LOCATION '{os.path.abspath(ckpt)}'"
             )
@@ -157,77 +177,109 @@ class PipelineRunner:
         return h.hexdigest()[:16]
 
     # -- execution ---------------------------------------------------------
+    def _run_stage(
+        self,
+        stage: Stage,
+        fingerprints: dict[str, str],
+        ctx: Mapping[str, DataFrame],
+    ) -> tuple[DataFrame, bool]:
+        """Resume or compute one stage; returns (checkpoint-backed output,
+        whether it was computed)."""
+        fp = fingerprints[stage.name]
+        state = self._load_state(stage.name)
+        ckpt = self._ckpt_path(stage.name)
+        if (
+            state is not None
+            and state.get("fingerprint") == fp
+            and state.get("status") == "committed"
+            and os.path.exists(os.path.join(ckpt, "_SUCCESS"))
+        ):
+            return self._load_ckpt(stage, ckpt), False
+
+        t0 = time.time()
+        df = stage.fn(self.spark, ctx)
+        if stage.bucket_by is not None:
+            from .bucketing import write_bucketed
+
+            key, n = stage.bucket_by
+            write_bucketed(
+                df, self._ckpt_table(stage.name), ckpt, n, key,
+                sort_cols=stage.sort_by,
+            )
+        else:
+            df.write.mode("overwrite").parquet(ckpt)
+        # per-partition lineage: output file ↔ write task; rows per file
+        lineage = footer_lineage(ckpt)
+        out = self._load_ckpt(stage, ckpt)
+        self._commit_state(
+            stage.name,
+            {
+                "stage": stage.name,
+                "fingerprint": fp,
+                "status": "committed",
+                "rows_out": int(sum(p["rows"] for p in lineage)),
+                "n_files": len(lineage),
+                "partitions": lineage,
+                "wall_s": round(time.time() - t0, 3),
+                "deps": {d: fingerprints[d] for d in stage.deps},
+            },
+        )
+        return out, True
+
     def run(
         self,
         stages: list[Stage],
         source_fingerprints: dict[str, str] | None = None,
     ) -> dict[str, DataFrame]:
-        """Run stages in order; resume from committed checkpoints.
+        """Run the stage DAG; resume from committed checkpoints.
 
         ``source_fingerprints`` seeds the fingerprint map for external
         inputs referenced in ``deps`` (e.g. {"transcripts": source_fingerprint(dir)}).
-        Returns {stage name: DataFrame} — checkpoint-backed for every stage.
+        Each stage runs on its own worker thread once every stage in its
+        ``deps`` has committed. If a stage raises, no further stage
+        starts, the running ones finish and commit, and the first error
+        is re-raised. Returns {stage name: DataFrame} in declaration
+        order — checkpoint-backed for every stage; ``computed`` and
+        ``skipped`` list stage names in declaration order too.
         """
         fingerprints = dict(source_fingerprints or {})
-        outputs: dict[str, DataFrame] = {}
-        self.computed, self.skipped = [], []
-
         for stage in stages:
-            fp = self._stage_fingerprint(stage, fingerprints)
-            fingerprints[stage.name] = fp
-            state = self._load_state(stage.name)
-            ckpt = self._ckpt_path(stage.name)
+            fingerprints[stage.name] = self._stage_fingerprint(stage, fingerprints)
+        names = {s.name for s in stages}
+        outputs: dict[str, DataFrame] = {}
+        computed: dict[str, bool] = {}
+        pending = list(stages)
+        running = {}
+        error: Exception | None = None
 
-            if (
-                state is not None
-                and state.get("fingerprint") == fp
-                and state.get("status") == "committed"
-                and os.path.exists(os.path.join(ckpt, "_SUCCESS"))
-            ):
-                outputs[stage.name] = self._load_ckpt(stage, ckpt)
-                self.skipped.append(stage.name)
-                continue
+        with ThreadPoolExecutor(max_workers=max(len(stages), 1)) as pool:
+            while True:
+                if error is None:
+                    for stage in [s for s in pending
+                                  if all(d in outputs for d in s.deps if d in names)]:
+                        pending.remove(stage)
+                        ctx = MappingProxyType(
+                            {d: outputs[d] for d in stage.deps if d in names})
+                        target = inheritable_thread_target(self.spark)(self._run_stage)
+                        running[pool.submit(target, stage, fingerprints, ctx)] = stage
+                if not running:
+                    break
+                done, _ = wait(running, return_when=FIRST_COMPLETED)
+                for fut in done:
+                    stage = running.pop(fut)
+                    try:
+                        outputs[stage.name], computed[stage.name] = fut.result()
+                    except Exception as e:
+                        if error is None:
+                            error = e
+                        else:
+                            error.add_note(f"stage {stage.name!r} also failed: {e!r}")
 
-            t0 = time.time()
-            df = stage.fn(self.spark, outputs)
-            if stage.bucket_by is not None:
-                from .bucketing import write_bucketed
-
-                key, n = stage.bucket_by
-                write_bucketed(
-                    df, self._ckpt_table(stage.name), ckpt, n, key,
-                    sort_cols=stage.sort_by,
-                )
-            else:
-                df.write.format(self.fmt).mode("overwrite").save(ckpt)
-            out = self._load_ckpt(stage, ckpt)
-            # per-partition lineage: output file ↔ write task; rows per file
-            lineage_rows = (
-                out.groupBy(F.input_file_name().alias("file"))
-                .agg(F.count(F.lit(1)).alias("rows"))
-                .collect()
-            )
-            lineage = sorted(
-                ({"file": os.path.basename(r["file"]), "rows": r["rows"]}
-                 for r in lineage_rows),
-                key=lambda p: p["file"],
-            )
-            self._commit_state(
-                stage.name,
-                {
-                    "stage": stage.name,
-                    "fingerprint": fp,
-                    "status": "committed",
-                    "rows_out": int(sum(p["rows"] for p in lineage)),
-                    "n_files": len(lineage),
-                    "partitions": lineage,
-                    "wall_s": round(time.time() - t0, 3),
-                    "deps": {d: fingerprints[d] for d in stage.deps},
-                },
-            )
-            outputs[stage.name] = out
-            self.computed.append(stage.name)
-        return outputs
+        self.computed = [s.name for s in stages if computed.get(s.name)]
+        self.skipped = [s.name for s in stages if computed.get(s.name) is False]
+        if error is not None:
+            raise error
+        return {s.name: outputs[s.name] for s in stages}
 
     def metrics_table(self) -> DataFrame:
         """The `_pipeline_state` metrics table as a DataFrame (one row per

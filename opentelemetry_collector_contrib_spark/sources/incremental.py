@@ -29,8 +29,8 @@ read (the batch_id partition column doubles as ingest lineage).
 
 Scale notes: state is O(files) driver-side JSON — the same cardinality
 the collector's storage extension carries; listings use os.walk once per
-poll. Per-file row counts (lineage) ride the same cheap
-input_file_name() metadata job the runner uses.
+poll. A batch's row count comes from a groupBy(input_file_name()) job
+over the batch directory it just wrote (a full read of the batch).
 """
 
 from __future__ import annotations

@@ -6,6 +6,7 @@ and zero."""
 
 from __future__ import annotations
 
+import json
 import os
 import tempfile
 
@@ -99,6 +100,21 @@ def test_runner_bucketed_checkpoint_survives_catalog_loss(
     r1 = PipelineRunner(spark, root)
     out1 = r1.run(stages, fps)
     assert r1.computed == ["parsed"]
+
+    # footer lineage == per-file counts of a read-back over the buckets
+    with open(os.path.join(root, "_pipeline_state", "parsed.json")) as f:
+        rec = json.load(f)
+    per_file = (
+        spark.read.parquet(os.path.join(root, "parsed"))
+        .groupBy(F.input_file_name().alias("file"))
+        .count()
+        .collect()
+    )
+    assert rec["partitions"] == sorted(
+        ({"file": os.path.basename(r["file"]), "rows": r["count"]}
+         for r in per_file),
+        key=lambda p: p["file"],
+    )
 
     # restart analog: catalog loses the table, state files remain
     spark.sql("DROP TABLE IF EXISTS ckpt_parsed")

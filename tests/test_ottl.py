@@ -958,6 +958,20 @@ def test_parse_json_merge(log_df):
     assert out["http.method"] == "get"
 
 
+def test_parse_key_value_multichar_delimiters(log_df):
+    """Multi-character delimiters split only where the whole delimiter
+    occurs (parseutils SplitString / strings.SplitN): a lone '|', '=' or
+    '>' stays in the key or value, and a quoted value keeps both."""
+    fn = compile_statement(
+        'merge_maps(attributes, ParseKeyValue('
+        '"k1=>v|1||k=2=>\\"a||b=>c\\"||k3=>x>y", "=>", "||"), "upsert")'
+    )
+    out = one(fn(log_df))["attributes"]
+    assert {k: out.get(k) for k in ("k1", "k=2", "k3")} == {
+        "k1": "v|1", "k=2": "a||b=>c", "k3": "x>y"}
+    assert len(out) == 6
+
+
 def test_filter_ottl_conditions(log_df):
     from opentelemetry_collector_contrib_spark.operators.filter import (
         filter_ottl,

@@ -6,9 +6,12 @@ a restart must not redo committed work, and must redo it when the
 input changes (offset invalidation ↔ fingerprint mismatch).
 """
 
+import json
 import os
+import threading
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_contrib_spark.plans.flagship import (
@@ -20,6 +23,34 @@ from opentelemetry_collector_contrib_spark.plans.runner import (
     Stage,
     source_fingerprint,
 )
+
+
+def read_back_lineage(spark, path):
+    """Per-file row counts of a parquet directory, computed by Spark."""
+    rows = (
+        spark.read.parquet(path)
+        .groupBy(F.input_file_name().alias("file"))
+        .count()
+        .collect()
+    )
+    return sorted(
+        ({"file": os.path.basename(r["file"]), "rows": r["count"]} for r in rows),
+        key=lambda p: p["file"],
+    )
+
+
+def group_job_count(spark, group, fn):
+    """Run ``fn`` under job group ``group``; the number of Spark jobs the
+    group holds once the listener bus has caught up."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_runner_resume_and_lineage(spark, sf_dir, tmp_path):
@@ -41,6 +72,13 @@ def test_runner_resume_and_lineage(spark, sf_dir, tmp_path):
     # rows_out in state == actual checkpoint row count
     enr_rows = out1["enriched"].count()
     assert m["enriched"]["rows_out"] == enr_rows
+
+    # footer lineage == per-file counts of a read-back over the checkpoint
+    for s in stages:
+        with open(os.path.join(ckpt, "_pipeline_state", f"{s.name}.json")) as f:
+            rec = json.load(f)
+        assert rec["partitions"] == read_back_lineage(
+            spark, os.path.join(ckpt, s.name)), s.name
 
     # resume: second run computes nothing
     r2 = PipelineRunner(spark, ckpt)
@@ -153,3 +191,99 @@ def test_runner_partial_crash_recovery(spark, tmp_path):
     os.remove(os.path.join(ckpt, "a", "_SUCCESS"))
     r.run([a], {})
     assert r.computed == ["a"]
+
+
+def _fanout(fn_b, fn_c):
+    """a → {b, c}: two stages that share one upstream stage."""
+    return [
+        Stage("a", lambda sp, ctx: sp.range(8, numPartitions=2)),
+        Stage("b", fn_b, deps=["a"]),
+        Stage("c", fn_c, deps=["a"]),
+    ]
+
+
+def test_runner_runs_sibling_stages_concurrently(spark, tmp_path):
+    """b and c only depend on a, so both run while the other is running:
+    each waits for the other at a barrier inside fn."""
+    barrier = threading.Barrier(2, timeout=10)
+
+    def meet(sp, ctx):
+        barrier.wait()
+        return ctx["a"]
+
+    r = PipelineRunner(spark, str(tmp_path / "ckpt"))
+    out = r.run(_fanout(meet, meet), {})
+    assert r.computed == ["a", "b", "c"]
+    assert list(out) == ["a", "b", "c"]
+    assert out["c"].count() == 8
+
+
+def test_runner_failed_branch_commits_sibling(spark, tmp_path):
+    """One branch raises while its sibling runs: run() re-raises the
+    error, the sibling commits, the failed stage has no state record, and
+    a rerun computes only the failed stage."""
+    ckpt = str(tmp_path / "ckpt")
+    barrier = threading.Barrier(2, timeout=10)
+    fail = [True]
+
+    def b(sp, ctx):
+        if fail[0]:
+            barrier.wait()
+            raise RuntimeError("stage b failed")
+        return ctx["a"]
+
+    def c(sp, ctx):
+        barrier.wait()
+        return ctx["a"].selectExpr("id * 2 AS id")
+
+    stages = _fanout(b, c)
+    r = PipelineRunner(spark, ckpt)
+    with pytest.raises(RuntimeError, match="stage b failed"):
+        r.run(stages, {})
+    state = os.path.join(ckpt, "_pipeline_state")
+    assert os.path.exists(os.path.join(state, "c.json"))
+    assert not os.path.exists(os.path.join(state, "b.json"))
+    assert r.computed == ["a", "c"]
+
+    fail[0] = False
+    r.run(stages, {})
+    assert r.computed == ["b"]
+    assert r.skipped == ["a", "c"]
+
+
+def test_runner_stage_jobs_inherit_caller_job_group(spark, tmp_path):
+    """A job group set by the caller covers the jobs the stages submit on
+    worker threads."""
+    groups = []
+
+    def b(sp, ctx):
+        groups.append(sp.sparkContext.getLocalProperty("spark.jobGroup.id"))
+        return ctx["a"]
+
+    def run():
+        PipelineRunner(spark, str(tmp_path / "ckpt")).run(_fanout(b, b), {})
+
+    n = group_job_count(spark, "runner-caller-group", run)
+    assert groups == ["runner-caller-group"] * 2
+    # at least one write job per stage
+    assert n >= 3
+
+
+def test_runner_lineage_submits_no_read_back_job(spark, tmp_path):
+    """A runner pass submits exactly the jobs of writing each checkpoint
+    and loading it back: lineage needs no job of its own."""
+    base = str(tmp_path / "base")
+
+    def plain():
+        spark.range(8, numPartitions=2).write.parquet(base)
+        spark.read.parquet(base)
+
+    def runner():
+        PipelineRunner(spark, str(tmp_path / "ckpt")).run(
+            [Stage("a", lambda sp, ctx: sp.range(8, numPartitions=2))], {})
+
+    assert group_job_count(spark, "lineage-runner", runner) == group_job_count(
+        spark, "lineage-plain", plain)
+    rec = json.loads((tmp_path / "ckpt" / "_pipeline_state" / "a.json").read_text())
+    assert rec["partitions"] == read_back_lineage(spark, str(tmp_path / "ckpt" / "a"))
+    assert rec["rows_out"] == 8 and rec["n_files"] == 2
