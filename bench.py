@@ -52,7 +52,7 @@ HEADLINE = [
     "flagship",        # end-to-end parse→enrich→route→aggregate (turns/sec metric)
     "t_parse",         # regexp_extract token parse stage
     "t_counts",        # routing fan-out + countconnector rollup
-    "t_conv_rollup",   # salted groupbyattrs conversation rollup (hot key)
+    "t_conv_rollup",   # groupbyattrs conversation rollup (hot key, one hash agg)
     "t_recombine",     # ordered per-conversation reassembly (window)
     "d_exact_dedup",   # training-data dedup: exact
     "d_minhash_sig",   # training-data dedup: MinHash signatures

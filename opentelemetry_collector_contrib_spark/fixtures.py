@@ -10,8 +10,9 @@ Scale tiers mirror /root/testdata sf dirs:
   sf0.001 ≈ 6k turns / 200 convs     (smoke)
   sf0.01  ≈ 60k turns / 2k convs     (correctness vs DuckDB oracle)
   sf0.1   ≈ 600k turns / 20k convs   (bench)
-One hot conversation holds ~5% of all rows (exercises the salted rollup —
-the skew the north rule mandates handling).
+One hot conversation holds ~5% of all rows (exercises the rollup's
+map-side partial aggregate on a hot key — the skew the north rule
+mandates handling).
 """
 
 from __future__ import annotations

@@ -3,16 +3,14 @@
 A training-data pipeline at 100 TB carries media alongside text. The
 engine treats payloads as opaque ``binary`` columns with a fixed metadata
 envelope (media_type, width, height, sample_rate, duration_ms, n_frames)
-and runs decode / feature-extract / resize / frame-sample as Arrow-batched
-``mapInPandas`` stages — the same vectorized-UDF discipline as the parse
-stage (no per-row Python round trips; one pandas batch in, one out).
+and runs feature-extract / frame-sample as Arrow-batched ``mapInPandas``
+stages — the same vectorized-UDF discipline as the parse stage (no
+per-row Python round trips; one pandas batch in, one out).
 
-DECODE IS STUBBED in this container (no PIL/ffmpeg/librosa baked in):
-``decode_image``/``decode_audio`` raise NotImplementedError unless the
-real codec library imports, and tests exercise the deterministic
-byte-level feature path instead. The Spark-side plumbing — schema,
-partitioning, UDF signatures, batch shapes — is real and tested; swapping
-the stub for a real decoder changes only the inner function body.
+There is no decode step: the package depends on no image or audio codec
+library (PIL, ffmpeg, librosa), so every stage works on the payload bytes
+(size, content hash, mean byte, fixed-size frame slices). A real decoder
+would be one more ``mapInPandas`` stage over the same pruned projection.
 
 Scale notes: payloads dominate row size, so stages select ONLY the columns
 they need before mapInPandas (column pruning stops at the Python
@@ -29,13 +27,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-try:  # real decoder, if the environment has it
-    from PIL import Image  # noqa: F401
-
-    _HAS_PIL = True
-except ImportError:
-    _HAS_PIL = False
 
 FEATURE_SCHEMA = (
     "media_id string, media_type string, n_bytes bigint, "
@@ -143,86 +134,3 @@ def frame_sample(df: DataFrame, k: int = 4) -> DataFrame:
             )
 
     return pruned.mapInPandas(slice_frames, FRAME_SCHEMA)
-
-
-def decode_image(df: DataFrame, out_size: tuple[int, int] = (64, 64)) -> DataFrame:
-    """Decode + resize images to fixed-size pixel tensors.
-
-    STUB: requires a real image codec (PIL), which is not available in
-    this container. The mapInPandas plumbing (schema
-    ``media_id string, pixels array<float>``, batch iteration, payload
-    pruning) is what the engine contributes; the decode body is the only
-    part gated on the library.
-    """
-    if not _HAS_PIL:
-        raise NotImplementedError(
-            "image decode requires PIL (not in this environment); "
-            "use media_features/frame_sample for decoder-free paths"
-        )
-    import io
-
-    pruned = df.filter(F.col("media_type") == "image").select(
-        "media_id", "payload"
-    )
-    w, h = out_size
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids, pix = [], []
-            for mid, p in zip(b["media_id"], b["payload"]):
-                img = Image.open(io.BytesIO(bytes(p))).convert("L").resize((w, h))
-                ids.append(mid)
-                pix.append(
-                    (np.asarray(img, dtype=np.float32) / 255.0).ravel().tolist()
-                )
-            yield pd.DataFrame({"media_id": ids, "pixels": pix})
-
-    return pruned.mapInPandas(decode, "media_id string, pixels array<float>")
-
-
-try:  # real audio decoder, if the environment has it
-    import librosa  # noqa: F401
-
-    _HAS_LIBROSA = True
-except ImportError:
-    _HAS_LIBROSA = False
-
-
-def decode_audio(
-    df: DataFrame, target_rate: int = 16_000, max_samples: int = 65_536
-) -> DataFrame:
-    """Decode + resample audio payloads to fixed-rate float waveforms.
-
-    STUB: requires a real audio codec (librosa/ffmpeg), not available in
-    this container. The mapInPandas plumbing (schema ``media_id string,
-    samples array<float>, sample_rate int``, payload pruning before the
-    Python boundary, bounded output via max_samples) is what the engine
-    contributes; the decode body is the only part gated on the library.
-    """
-    if not _HAS_LIBROSA:
-        raise NotImplementedError(
-            "audio decode requires librosa (not in this environment); "
-            "use media_features for the decoder-free path"
-        )
-    import io
-
-    pruned = df.filter(F.col("media_type") == "audio").select(
-        "media_id", "payload"
-    )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids, waves = [], []
-            for mid, p in zip(b["media_id"], b["payload"]):
-                y, _ = librosa.load(io.BytesIO(bytes(p)), sr=target_rate)
-                ids.append(mid)
-                waves.append(y[:max_samples].astype(np.float32).tolist())
-            yield pd.DataFrame({
-                "media_id": ids,
-                "samples": waves,
-                "sample_rate": [target_rate] * len(ids),
-            })
-
-    return pruned.mapInPandas(
-        decode, "media_id string, samples array<float>, sample_rate int"
-    )

@@ -164,21 +164,6 @@ def include_exclude_gate(cfg: dict, **cols) -> Column | None:
     return gate
 
 
-def filter_severity_min(
-    df: DataFrame,
-    min_severity: int,
-    match_undefined: bool = False,
-    sev_col: str = "severity_number",
-) -> DataFrame:
-    """filterprocessor severity_number include matcher (config.go:224-240):
-    keep rows with severity >= min; match_undefined keeps severity 0."""
-    c = F.col(sev_col)
-    keep = c >= min_severity
-    if match_undefined:
-        keep = keep | (c == 0) | c.isNull()
-    return df.filter(F.coalesce(keep, F.lit(False)))
-
-
 def drop_ratio(
     df: DataFrame, ratio: float, key: Column, seed: int = 0
 ) -> DataFrame:

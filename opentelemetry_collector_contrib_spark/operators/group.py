@@ -1,4 +1,4 @@
-"""Grouping operators — groupbyattrs + the salted conversation rollup.
+"""Grouping operators — groupbyattrs + the conversation rollup.
 
 Reference: processor/groupbyattrsprocessor (processor.go:63-100,
 attribute_groups.go:70-120): move listed attribute keys from record →
@@ -6,18 +6,17 @@ resource and regroup records under the (base resource ⊕ extracted attrs)
 identity. In a flat DataFrame the "regroup" is just groupBy/repartition
 on the new resource key — no physical nesting exists to maintain.
 
-Skew: the north rule mandates explicit hot-key handling for conv_id.
-``salted_agg`` implements two-phase aggregation: partial aggregate on
-(key, salt) — spreads a hot key over S reducers — then final combine on
-key. Use for algebraic aggregates only (count/sum/min/max); Spark's own
-map-side partial aggregation already handles most skew for those, so the
-salt matters when the per-key *final* state is big (collect_list) or when
-AQE skew handling is off.
+Skew: conv_id is Zipf-hot. The rollup's aggregates are algebraic, so
+Spark's partial HashAggregate already combines a hot key map-side, down
+to one row per map task before the Exchange; a salted two-phase
+aggregate only adds a second shuffle (measured slower on a 5% hot key).
+Salting stays where it pays: non-algebraic per-key work such as the
+window rank in ``textops.stratified_topk``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -44,63 +43,17 @@ def group_by_attrs(
     )
 
 
-def salted_agg(
-    df: DataFrame,
-    key: str | list[str],
-    aggs: dict[str, tuple[str, str]],
-    salt_buckets: int = 32,
-) -> DataFrame:
-    """Two-phase skew-safe aggregation.
-
-    aggs: {out_name: (agg_fn, col)} with agg_fn ∈ {count,sum,min,max}.
-    Phase 1 groups on (key, salt) — a hot conv_id spreads across
-    ``salt_buckets`` reducers; phase 2 combines partials per key. The
-    combine rule per fn: count→sum, sum→sum, min→min, max→max.
-    """
-    keys = [key] if isinstance(key, str) else list(key)
-    salt = (F.crc32(F.concat_ws("\x00", *[F.col(k) for k in keys]))
-            + F.spark_partition_id()) % salt_buckets
-    df1 = df.withColumn("_salt", salt.cast("int"))
-
-    partial_exprs, final_exprs = [], []
-    for out, (fn, col) in aggs.items():
-        p = f"_p_{out}"
-        if fn == "count":
-            partial_exprs.append(F.count(F.lit(1)).alias(p))
-            final_exprs.append(F.sum(p).alias(out))
-        elif fn == "sum":
-            partial_exprs.append(F.sum(col).alias(p))
-            final_exprs.append(F.sum(p).alias(out))
-        elif fn == "min":
-            partial_exprs.append(F.min(col).alias(p))
-            final_exprs.append(F.min(p).alias(out))
-        elif fn == "max":
-            partial_exprs.append(F.max(col).alias(p))
-            final_exprs.append(F.max(p).alias(out))
-        else:
-            raise ValueError(f"non-algebraic agg {fn!r} cannot be salted")
-    partial = df1.groupBy(*keys, "_salt").agg(*partial_exprs)
-    return partial.groupBy(*keys).agg(*final_exprs)
-
-
-def conversation_rollup(df: DataFrame, salted: bool = True) -> DataFrame:
+def conversation_rollup(df: DataFrame) -> DataFrame:
     """Flagship groupbyattrs-style rollup: per-conversation stats over the
-    parsed transcripts. conv_id is Zipf-hot → salted two-phase by default."""
-    aggs = {
-        "n_turns": ("count", "turn_idx"),
-        "n_errors": ("sum", "is_error_int"),
-        "total_dur_ms": ("sum", "dur_ms"),
-        "first_ts": ("min", "ts"),
-        "last_ts": ("max", "ts"),
-        "max_severity": ("max", "severity_number"),
-    }
-    df = df.withColumn(
-        "is_error_int", (F.col("severity_number") >= 17).cast("int")
-    )
-    if salted:
-        out = salted_agg(df, "conv_id", aggs)
-    else:
-        out = df.groupBy("conv_id").agg(
+    parsed transcripts. One hash aggregate on conv_id: its partial
+    (map-side) phase folds the Zipf-hot conversation to one row per map
+    task before the shuffle, so no salt is needed."""
+    return (
+        df.withColumn(
+            "is_error_int", (F.col("severity_number") >= 17).cast("int")
+        )
+        .groupBy("conv_id")
+        .agg(
             F.count(F.lit(1)).alias("n_turns"),
             F.sum("is_error_int").alias("n_errors"),
             F.sum("dur_ms").alias("total_dur_ms"),
@@ -108,7 +61,8 @@ def conversation_rollup(df: DataFrame, salted: bool = True) -> DataFrame:
             F.max("ts").alias("last_ts"),
             F.max("severity_number").alias("max_severity"),
         )
-    return out.withColumn("n_errors", F.coalesce(F.col("n_errors"), F.lit(0)))
+        .withColumn("n_errors", F.coalesce(F.col("n_errors"), F.lit(0)))
+    )
 
 
 def skew_stats(
@@ -117,7 +71,7 @@ def skew_stats(
     topk: int = 20,
 ):
     """Hot-key diagnosis — the operability primitive behind every
-    salting decision in this engine (conversation_rollup's salt factor,
+    skew decision in this engine (whether a per-key stage needs a salt,
     lsh_ann_pairs' bucket cap): per-key row counts for the heaviest
     `topk` keys plus each key's skew ratio vs the mean key. A key with
     skew >> 1 is the one that serializes a shuffle stage.
@@ -126,8 +80,6 @@ def skew_stats(
     global agg broadcast back, and TakeOrderedAndProject for the top-k
     (heap per partition — never a global sort). Deterministic at the
     k-boundary: ties break on the key itself."""
-    from pyspark.sql import functions as F
-
     counts = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n_rows"))
     totals = counts.agg(
         F.sum("n_rows").alias("_total"),

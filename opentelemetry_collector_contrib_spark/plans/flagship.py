@@ -124,7 +124,7 @@ def flagship_stages(fixture_dir: str):
         ),
         Stage(
             "conversation_rollup",
-            lambda spark, ctx: conversation_rollup(ctx["enriched"], salted=True),
+            lambda spark, ctx: conversation_rollup(ctx["enriched"]),
             deps=["enriched"],
         ),
     ]

@@ -32,8 +32,9 @@ a crash between the two re-runs the stage, never serves half a table.
 
 Scale notes: state records are O(stages), not O(rows) — driver-side JSON
 is fine at any data scale. Lineage per-file row counts are read
-in-process from the footers of the part files the write just produced;
-no Spark job reads the checkpoint back.
+in-process from the footers of the part files the write just produced,
+and a fresh checkpoint is loaded with the schema the write already
+knows; no Spark job reads the checkpoint back.
 """
 
 from __future__ import annotations
@@ -206,11 +207,14 @@ class PipelineRunner:
                 df, self._ckpt_table(stage.name), ckpt, n, key,
                 sort_cols=stage.sort_by,
             )
+            out = self._load_ckpt(stage, ckpt)
         else:
             df.write.mode("overwrite").parquet(ckpt)
+            # the write's schema is the checkpoint's: passing it skips the
+            # schema-inference job that a bare read.parquet submits
+            out = self.spark.read.schema(df.schema).parquet(ckpt)
         # per-partition lineage: output file ↔ write task; rows per file
         lineage = footer_lineage(ckpt)
-        out = self._load_ckpt(stage, ckpt)
         self._commit_state(
             stage.name,
             {

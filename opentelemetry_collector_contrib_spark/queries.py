@@ -274,10 +274,9 @@ SELECT sink, coalesce(role, '<none>') AS role,
 FROM routed GROUP BY 1, 2""",
     )
 
-    # ---- groupbyattrs-style salted conversation rollup
+    # ---- groupbyattrs-style conversation rollup (hot conv_id, one hash agg)
     def t_conv_rollup(spark, sf_dir):
-        df = _parsed(spark, sf_dir)
-        out = conversation_rollup(df, salted=True)
+        out = conversation_rollup(_parsed(spark, sf_dir))
         return out.select(
             "conv_id",
             F.col("n_turns").cast("long").alias("n_turns"),
@@ -4882,7 +4881,7 @@ SELECT doc_id, source FROM ranked WHERE r <= 5""",
 
     # ---- t_skew_stats: hot-key diagnosis -------------------------------------
     # top-20 conversations by turn count + skew ratio vs the mean key —
-    # the measurement behind the salted-rollup decision. Hash agg +
+    # the measurement behind each salt-or-not decision. Hash agg +
     # broadcast scalar + TakeOrderedAndProject.
     def t_skew_stats(spark, sf_dir):
         from .operators.group import skew_stats

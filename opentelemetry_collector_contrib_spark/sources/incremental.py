@@ -27,10 +27,17 @@ batch into the same directory — overwrite, not duplicate. Readers see
 the union of committed batch directories through a plain partitioned
 read (the batch_id partition column doubles as ingest lineage).
 
+On a table format with snapshots (Iceberg), the watermark would be the
+last committed snapshot ID instead of the file set: a poll reads the
+rows appended between that snapshot and a current snapshot pinned
+BEFORE the read, writes them under the next batch id, then commits the
+new watermark with the same write-then-replace order.
+
 Scale notes: state is O(files) driver-side JSON — the same cardinality
 the collector's storage extension carries; listings use os.walk once per
-poll. A batch's row count comes from a groupBy(input_file_name()) job
-over the batch directory it just wrote (a full read of the batch).
+poll. Batches are parquet; a batch's row count is summed from the
+footers of the part files it just wrote (plans/runner.footer_lineage),
+so counting submits no Spark job.
 """
 
 from __future__ import annotations
@@ -41,6 +48,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..plans.runner import footer_lineage
 
 STATE_FILE = "_ingest_state.json"
 
@@ -80,12 +89,10 @@ class IncrementalFileSource:
         spark: SparkSession,
         input_dir: str,
         out_dir: str,
-        fmt: str = "parquet",
     ) -> None:
         self.spark = spark
         self.input_dir = input_dir
         self.out_dir = out_dir
-        self.fmt = fmt
         os.makedirs(out_dir, exist_ok=True)
 
     # -- state --------------------------------------------------------------
@@ -203,7 +210,7 @@ class IncrementalFileSource:
             paths = [self.input_dir]
         else:
             paths = [os.path.join(self.input_dir, rel) for rel in to_process]
-        df = self.spark.read.format(self.fmt).load(paths)
+        df = self.spark.read.parquet(*paths)
         if transform is not None:
             # context-aware transforms (df, ctx) learn which batches this
             # poll supersedes BEFORE the state commit — anything that
@@ -216,15 +223,8 @@ class IncrementalFileSource:
         # idempotent batch-scoped sink: replay after a crash between the
         # write and the state commit overwrites the SAME directory
         batch_dir = os.path.join(self.out_dir, f"batch_id={batch_id}")
-        df.write.format(self.fmt).mode("overwrite").save(batch_dir)
-
-        out = self.spark.read.format(self.fmt).load(batch_dir)
-        lineage_rows = (
-            out.groupBy(F.input_file_name().alias("file"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
-        )
-        rows_out = int(sum(r["rows"] for r in lineage_rows))
+        df.write.mode("overwrite").parquet(batch_dir)
+        rows_out = sum(p["rows"] for p in footer_lineage(batch_dir))
 
         record = {
             "batch_id": batch_id,
@@ -280,15 +280,13 @@ class IncrementalFileSource:
         ]
         if not committed:
             raise FileNotFoundError(f"no committed batches in {self.out_dir}")
-        df = (
-            self.spark.read.format(self.fmt)
-            .option("basePath", self.out_dir)
+        return (
+            self.spark.read.option("basePath", self.out_dir)
             .option("mergeSchema", "true")
-            .load([
+            .parquet(*[
                 os.path.join(self.out_dir, f"batch_id={b}") for b in committed
             ])
         )
-        return df
 
     def metrics(self) -> DataFrame:
         """One row per committed poll: batch_id, files, rows."""
@@ -319,9 +317,9 @@ class MaintainedRollup:
     marked superseded (record["supersedes"]) before updating with the
     replacement batch. snapshot() is O(batches × groups) rows, never
     O(ingested rows). Only algebraic measures are offered (count/sum
-    merge by sum) — the same guard the salted conversation rollup
-    enforces; holistic aggregates (distinct, median) need the corpus and
-    belong on the cumulative table instead.
+    merge by sum, exactly as a partial HashAggregate merges); holistic
+    aggregates (distinct, median) need the corpus and belong on the
+    cumulative table instead.
     """
 
     MANIFEST = "_rollup_state.json"
@@ -332,13 +330,11 @@ class MaintainedRollup:
         agg_dir: str,
         keys: list[str],
         sum_cols: list[str] | None = None,
-        fmt: str = "parquet",
     ) -> None:
         self.spark = spark
         self.agg_dir = agg_dir
         self.keys = list(keys)
         self.sum_cols = list(sum_cols or [])
-        self.fmt = fmt
         os.makedirs(agg_dir, exist_ok=True)
 
     def _partial(self, df: DataFrame) -> DataFrame:
@@ -364,9 +360,7 @@ class MaintainedRollup:
 
     def update(self, batch_df: DataFrame, batch_id: int) -> None:
         part_dir = os.path.join(self.agg_dir, f"batch_id={batch_id}")
-        self._partial(batch_df).write.format(self.fmt).mode(
-            "overwrite"
-        ).save(part_dir)
+        self._partial(batch_df).write.mode("overwrite").parquet(part_dir)
         self._commit_manifest([*self._load_manifest(), batch_id])
 
     def retract(self, batch_id: int) -> None:
@@ -385,12 +379,8 @@ class MaintainedRollup:
             raise FileNotFoundError(
                 f"no committed rollup batches in {self.agg_dir}"
             )
-        merged = (
-            self.spark.read.format(self.fmt)
-            .option("basePath", self.agg_dir)
-            .load([
-                os.path.join(self.agg_dir, f"batch_id={b}") for b in committed
-            ])
+        merged = self.spark.read.option("basePath", self.agg_dir).parquet(
+            *[os.path.join(self.agg_dir, f"batch_id={b}") for b in committed]
         )
         aggs = [F.sum("n").alias("n")]
         aggs += [F.sum(f"sum_{c}").alias(f"sum_{c}") for c in self.sum_cols]

@@ -16,6 +16,26 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def group_job_count(spark):
+    """``group_job_count(group, fn)``: run ``fn`` under Spark job group
+    ``group``; the number of Spark jobs the group holds once the
+    listener bus has caught up."""
+    sc = spark.sparkContext
+
+    def count(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
+@pytest.fixture(scope="session")
 def sf_dir():
     """Smoke tier fixture dir (sf0.001, ~6k turns)."""
     return ensure_fixture_dir("sf0.001")

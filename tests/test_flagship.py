@@ -4,17 +4,10 @@ per-sink routed-row SET equality, countconnector equality, per-turn
 
 from collections import Counter
 
-import pandas as pd
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_contrib_spark import oracle
-from opentelemetry_collector_contrib_spark.operators.group import (
-    conversation_rollup,
-)
-from opentelemetry_collector_contrib_spark.plans.flagship import (
-    parsed_enriched,
-    run_flagship,
-)
+from opentelemetry_collector_contrib_spark.plans.flagship import run_flagship
 
 
 def _spark_outputs(spark, sf_dir):
@@ -62,16 +55,6 @@ def test_text_byte_equality_under_stable_order(spark, sf_dir):
         .collect()
     ]
     assert got == expected
-
-
-def test_salted_rollup_equals_plain(spark, sf_dir):
-    enriched = parsed_enriched(spark, sf_dir)
-    salted = conversation_rollup(enriched, salted=True)
-    plain = conversation_rollup(enriched, salted=False)
-    cols = ["conv_id", "n_turns", "n_errors", "total_dur_ms", "max_severity"]
-    ps = salted.select(cols).orderBy("conv_id").toPandas()
-    pp = plain.select(cols).orderBy("conv_id").toPandas()
-    pd.testing.assert_frame_equal(ps, pp, check_dtype=False)
 
 
 def test_rollup_matches_oracle(spark, sf_dir):

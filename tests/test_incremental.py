@@ -439,23 +439,28 @@ def test_corpus_refresh_rewrite_keeps_carried_docs(spark, tmp_path):
     assert {r.doc_id for r in src.table().collect()} == {1, 3, 4, 5, 7}
 
 
-def test_iceberg_seam_gated_and_probed(spark, tmp_path):
-    """The Iceberg-native incremental adapter (sources/iceberg.py) is the
-    snapshot-watermark twin of IncrementalFileSource, env-gated like the
-    media decoders: in this sandbox the runtime jar is absent, so the
-    capability probe must say so and construction must fail with the
-    actionable message (on a cluster with the jar the same class runs
-    as-is)."""
-    import pytest as _pytest
+def test_poll_counts_rows_from_footers(spark, tmp_path, group_job_count):
+    """A poll submits exactly the jobs of reading its delta, transforming
+    it and writing the batch: the batch's row count comes from the part
+    files' footers, not from a Spark job over the batch."""
+    input_dir = str(tmp_path / "in")
+    _write_part(spark, input_dir, "day=1", 0, 100)
+    part = os.path.join(input_dir, "day=1")
+    files = [os.path.join(part, f) for f in os.listdir(part)
+             if f.endswith(".parquet")]
 
-    from opentelemetry_collector_contrib_spark.sources.iceberg import (
-        IcebergIncrementalSource,
-        iceberg_available,
-    )
+    def transform(df):
+        return df.withColumn("v3", F.col("v") * 3)
 
-    if iceberg_available(spark):  # pragma: no cover — jar-present envs
-        _pytest.skip("Iceberg runtime present; gate test not applicable")
-    with _pytest.raises(RuntimeError, match="iceberg-spark-runtime"):
-        IcebergIncrementalSource(
-            spark, "db.events", "db.events_ingested", str(tmp_path)
-        )
+    def plain():
+        transform(spark.read.parquet(*files)).write.parquet(
+            str(tmp_path / "plain"))
+
+    rec = {}
+
+    def poll():
+        src = IncrementalFileSource(spark, input_dir, str(tmp_path / "out"))
+        rec.update(src.poll(transform))
+
+    assert group_job_count("poll", poll) == group_job_count("poll-plain", plain)
+    assert rec["rows_out"] == 100

@@ -1,7 +1,7 @@
 """Multimodal plumbing: binary payload columns through mapInPandas.
 
-The decode step is stubbed (no codec libs in this container); what's
-under test is the Spark-side contract — schema, payload pruning before
+There is no decode step (no codec library is available); what's under
+test is the Spark-side contract — schema, payload pruning before
 the Python boundary, Arrow batch iteration, deterministic byte-level
 features, frame-plan/frame-bytes agreement.
 """
@@ -13,8 +13,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_contrib_spark.multimodal import (
-    _HAS_PIL,
-    decode_image,
     frame_offsets,
     frame_sample,
     media_features,
@@ -74,26 +72,3 @@ def test_frame_counts_bounded_by_k_and_n_frames(media):
     }
     for r in per:
         assert 1 <= r["count"] <= min(4, nf[r["media_id"]])
-
-
-def test_decode_image_stub_gated(media):
-    if _HAS_PIL:
-        pytest.skip("PIL available; stub path not applicable")
-    with pytest.raises(NotImplementedError):
-        decode_image(media)
-
-
-def test_decode_audio_gated(spark, media):
-    """decode_audio raises the documented NotImplementedError without
-    librosa; the plumbing (schema resolution on the pruned projection)
-    must still be constructible when gated."""
-    import pytest
-
-    from opentelemetry_collector_contrib_spark import multimodal as M
-
-    if not M._HAS_LIBROSA:
-        with pytest.raises(NotImplementedError, match="librosa"):
-            M.decode_audio(media)
-    else:  # pragma: no cover - environment-dependent
-        out = M.decode_audio(media)
-        assert dict(out.dtypes)["samples"] == "array<float>"

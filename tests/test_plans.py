@@ -85,14 +85,20 @@ def test_severity_mapping_is_broadcast_join(spark):
     assert "BroadcastHashJoin" in _plan(df)
 
 
-def test_rollup_is_salted_two_phase(spark):
-    """The conversation rollup must aggregate on (conv_id, salt) before
-    the final conv_id agg — the Zipf-hot key protection. Two distinct
-    HashAggregate key sets in the plan prove the two phases exist."""
+def test_rollup_partial_aggregates_before_one_shuffle(spark):
+    """The conversation rollup shuffles once, on conv_id, and a partial
+    HashAggregate below that Exchange folds the Zipf-hot key map-side to
+    one row per task — the hot-key protection, with no salt."""
     df = parse_transcripts(read_transcripts(spark, _fx()))
     plan = _plan(conversation_rollup(df), mode="simple")
-    assert "_salt" in plan
-    assert plan.count("HashAggregate") >= 4  # partial+final × two phases
+    shuffles = [ln for ln in plan.splitlines()
+                if "Exchange " in ln and "BroadcastExchange" not in ln]
+    assert len(shuffles) == 1
+    assert "Exchange hashpartitioning(conv_id" in shuffles[0]
+    below = plan.split(shuffles[0], 1)[1].splitlines()
+    partial = next(ln for ln in below if "HashAggregate" in ln)
+    assert "partial_count" in partial and "partial_sum" in partial
+    assert "_salt" not in plan
 
 
 def test_filter_pushed_to_parquet_scan(spark):

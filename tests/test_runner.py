@@ -39,20 +39,6 @@ def read_back_lineage(spark, path):
     )
 
 
-def group_job_count(spark, group, fn):
-    """Run ``fn`` under job group ``group``; the number of Spark jobs the
-    group holds once the listener bus has caught up."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_runner_resume_and_lineage(spark, sf_dir, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     stages, fps = flagship_stages(sf_dir)
@@ -251,7 +237,7 @@ def test_runner_failed_branch_commits_sibling(spark, tmp_path):
     assert r.skipped == ["a", "c"]
 
 
-def test_runner_stage_jobs_inherit_caller_job_group(spark, tmp_path):
+def test_runner_stage_jobs_inherit_caller_job_group(spark, tmp_path, group_job_count):
     """A job group set by the caller covers the jobs the stages submit on
     worker threads."""
     groups = []
@@ -263,27 +249,32 @@ def test_runner_stage_jobs_inherit_caller_job_group(spark, tmp_path):
     def run():
         PipelineRunner(spark, str(tmp_path / "ckpt")).run(_fanout(b, b), {})
 
-    n = group_job_count(spark, "runner-caller-group", run)
+    n = group_job_count("runner-caller-group", run)
     assert groups == ["runner-caller-group"] * 2
     # at least one write job per stage
     assert n >= 3
 
 
-def test_runner_lineage_submits_no_read_back_job(spark, tmp_path):
-    """A runner pass submits exactly the jobs of writing each checkpoint
-    and loading it back: lineage needs no job of its own."""
+def test_runner_lineage_submits_no_read_back_job(spark, tmp_path, group_job_count):
+    """A runner pass submits exactly the jobs of writing each checkpoint:
+    neither lineage nor loading the checkpoint back needs a job of its
+    own, and the loaded checkpoint has the schema a plain read infers."""
     base = str(tmp_path / "base")
 
     def plain():
         spark.range(8, numPartitions=2).write.parquet(base)
-        spark.read.parquet(base)
+
+    out = {}
 
     def runner():
-        PipelineRunner(spark, str(tmp_path / "ckpt")).run(
-            [Stage("a", lambda sp, ctx: sp.range(8, numPartitions=2))], {})
+        out.update(PipelineRunner(spark, str(tmp_path / "ckpt")).run(
+            [Stage("a", lambda sp, ctx: sp.range(8, numPartitions=2))], {}))
 
-    assert group_job_count(spark, "lineage-runner", runner) == group_job_count(
-        spark, "lineage-plain", plain)
+    assert group_job_count("lineage-runner", runner) == group_job_count(
+        "lineage-plain", plain)
+    ckpt = str(tmp_path / "ckpt" / "a")
+    assert out["a"].schema == spark.read.parquet(ckpt).schema
+    assert sorted(r.id for r in out["a"].collect()) == list(range(8))
     rec = json.loads((tmp_path / "ckpt" / "_pipeline_state" / "a.json").read_text())
     assert rec["partitions"] == read_back_lineage(spark, str(tmp_path / "ckpt" / "a"))
     assert rec["rows_out"] == 8 and rec["n_files"] == 2
