@@ -362,213 +362,167 @@ def _apply_stanza_operators(df: DataFrame, ops) -> DataFrame:
     shared transformer surface (helper/transformer.go:96-140):
 
     - ``if``: a row predicate (Spark-SQL here; expr-lang in the
-      reference — same documented deviation as EXPR() values). The
-      operator is SKIPPED for non-matching rows: parsers see a nulled
-      source (outputs null, row passes through untouched), mutations
-      write conditionally. Column-level ops (remove/retain) null the
-      affected fields per-row (a flattened schema cannot drop a column
-      per-row); trace_parser blends its three outputs per-row.
+      reference — same documented deviation as EXPR() values). Rows
+      failing it pass through the operator untouched (transformer.go
+      Skip): the operator runs as it would ungated and ``_skip`` keeps
+      each skipped row's prior values. A flattened schema cannot add or
+      drop a column per row, so a field the operator adds is NULL on
+      skipped rows, one it removes is NULL where it ran, and one it
+      retypes in place is NULL on skipped rows. ``filter`` instead
+      drops only rows matching both ``if`` and ``expr``.
     - ``on_error`` ∈ send/send_quiet/drop/drop_quiet: send keeps the
       row with null parse outputs (null-safe extraction — the default);
       drop removes rows the parser was applied to but produced nothing.
       The *_quiet variants differ only in logging in the reference.
     """
-    from .operators import mutate, parse
-
     for op in ops or []:
         typ = _base_type(op.get("type", ""))
-        src = _field(op, "parse_from", "body")
-        to = _field(op, "parse_to", "parsed")
+        on_error = op.get("on_error", "send")
+        if on_error not in ("send", "send_quiet", "drop", "drop_quiet"):
+            raise ConfigError(f"unknown on_error {on_error!r}")
         pred = (
             F.coalesce(F.expr(op["if"]), F.lit(False))
             if "if" in op else None
         )
-        on_error = op.get("on_error", "send")
-        if on_error not in ("send", "send_quiet", "drop", "drop_quiet"):
-            raise ConfigError(f"unknown on_error {on_error!r}")
-        # stanza `if` on a parser: null the source for skipped rows —
-        # null in → null out, row intact (helper/transformer.go Skip).
-        # trace_parser reads its own fields, not `src` — handled in
-        # its branch by blending outputs per-row instead
-        if pred is not None and typ in _PARSER_TYPES and typ != "trace_parser":
-            df = df.withColumn("__if_src", F.when(pred, F.col(src)))
-            src = "__if_src"
-        before_cols = set(df.columns)
-        if typ == "regex_parser":
-            # on_error=drop handled generically below (must not drop
-            # if-skipped rows, which the parser-internal drop would)
-            df = parse.regex_parser(df, src, op["regex"], "send")
-        elif typ == "json_parser":
-            df = parse.json_parser(
-                df, src, op.get("schema", "map<string,string>"), to
-            )
-        elif typ == "csv_parser":
-            header = op.get("header")
-            if isinstance(header, str):
-                header = header.split(op.get("delimiter", ","))
-            schema = op.get("schema") or ", ".join(
-                f"`{h}` string" for h in header
-            )
-            df = parse.csv_parser(
-                df, src, schema, to, op.get("delimiter", ",")
-            )
-        elif typ == "keyvalue_parser":
-            df = parse.keyvalue_parser(
-                df, src, to,
-                pair_delim=op.get("pair_delimiter", " "),
-                kv_delim=op.get("delimiter", "="),
-            )
-        elif typ == "jsonarray_parser":
-            df = parse.jsonarray_parser(df, src, to, op.get("header"))
-        elif typ == "time_parser":
-            df = parse.time_parser(
-                df, src, op.get("layout_type", "strptime"),
-                op.get("layout"), op.get("to", "ts"),
-            )
-        elif typ == "severity_parser":
-            df = parse.severity_parser(df, src, mapping=op.get("mapping"))
-        elif typ == "trace_parser":
-            if pred is not None:
-                # snapshot the predicate and prior outputs BEFORE the
-                # parse (both must see pre-op values), then blend:
-                # matched rows take the parsed value, skipped rows keep
-                # their original trace_id/span_id/flags untouched
-                outs = ("trace_id", "span_id", "flags")
-                df = df.withColumn("__tp_if", pred)
-                keep = {c: f"__tp_{c}" for c in outs if c in df.columns}
-                for c, k in keep.items():
-                    df = df.withColumn(k, F.col(c))
-                df = _apply_sub_parsers(df, {"trace": op})
-                for c in outs:
-                    if c in df.columns:
-                        orig = F.col(keep[c]) if c in keep else F.lit(None)
-                        df = df.withColumn(
-                            c,
-                            F.when(F.col("__tp_if"), F.col(c))
-                            .otherwise(orig),
-                        )
-                df = df.drop("__tp_if", *keep.values())
-            else:
-                df = _apply_sub_parsers(df, {"trace": op})
-        elif typ == "uri_parser":
-            df = parse.uri_parser(df, src)
-        elif typ == "container":
-            df = parse.container_parser(
-                df, source=src, path_col=op.get("path_col"),
-                fmt=op.get("format"),
-                add_metadata_from_filepath=op.get(
-                    "add_metadata_from_file_path", True
-                ),
-            )
-        elif typ == "syslog_parser":
-            proto = op.get("protocol", "rfc3164")
-            if proto == "rfc5424":
-                df = parse.syslog_rfc5424_parser(
-                    df, src, op.get("enable_octet_counting", False)
-                )
-            else:
-                df = parse.regex_parser(df, src, _RFC3164_GROK)
-        elif typ == "add":
-            v = op.get("value")
-            # stanza EXPR(...) values compile via expr-lang; here the
-            # inner expression is Spark-SQL (documented deviation)
-            col = (
-                F.expr(str(v)[5:-1])
-                if isinstance(v, str) and v.startswith("EXPR(")
-                else F.lit(v)
-            )
-            field = _field(op, "field")
-            if pred is not None:
-                orig = (
-                    F.col(field) if field in df.columns else F.lit(None)
-                )
-                col = F.when(pred, col).otherwise(orig)
-            df = mutate.add(df, field, col)
-        elif typ == "copy":
-            frm, dst = _field(op, "from"), _field(op, "to")
-            if pred is not None:
-                orig = F.col(dst) if dst in df.columns else F.lit(None)
-                df = mutate.add(
-                    df, dst, F.when(pred, F.col(frm)).otherwise(orig)
-                )
-            else:
-                df = mutate.copy_field(df, frm, dst)
-        elif typ == "move":
-            frm, dst = _field(op, "from"), _field(op, "to")
-            if pred is not None:
-                orig = F.col(dst) if dst in df.columns else F.lit(None)
-                df = (
-                    df.withColumn(
-                        "__mv", F.when(pred, F.col(frm)).otherwise(orig)
-                    )
-                    # source nulled where moved (a flattened schema
-                    # cannot drop a column per-row)
-                    .withColumn(frm, F.when(~pred, F.col(frm)))
-                    .withColumnRenamed("__mv", dst)
-                ) if dst not in df.columns else (
-                    df.withColumn(
-                        dst, F.when(pred, F.col(frm)).otherwise(orig)
-                    ).withColumn(frm, F.when(~pred, F.col(frm)))
-                )
-            else:
-                df = mutate.move(df, frm, dst)
-        elif typ == "remove":
-            field = _field(op, "field")
-            if pred is not None:
-                # helper/transformer.go Skip: rows failing `if` pass
-                # through untouched; a flattened schema cannot drop a
-                # column per-row, so the field is nulled where removed
-                if field in df.columns:
-                    df = df.withColumn(field, F.when(~pred, F.col(field)))
-            else:
-                df = mutate.remove(df, field)
-        elif typ == "retain":
-            kept = [_strip_field(x) for x in op["fields"]]
-            if pred is not None:
-                # same per-row form: non-retained fields nulled where
-                # `if` matches, schema unchanged (see move above)
-                for c in df.columns:
-                    if c not in kept:
-                        df = df.withColumn(c, F.when(~pred, F.col(c)))
-            else:
-                df = mutate.retain(df, kept)
-        elif typ == "unquote":
-            field = _field(op, "field")
-            if pred is not None:
-                uq = mutate.unquote(
-                    df.withColumn("__uq", F.col(field)), "__uq"
-                )
-                df = uq.withColumn(
-                    field,
-                    F.when(pred, F.col("__uq")).otherwise(F.col(field)),
-                ).drop("__uq")
-            else:
-                df = mutate.unquote(df, field)
-        elif typ == "filter":
+        if typ == "filter":
             # transformer/filter: DROP rows matching the expr (gated on
             # `if` when present — skipped rows are never dropped)
             drop_pred = F.coalesce(F.expr(op["expr"]), F.lit(False))
             if pred is not None:
                 drop_pred = drop_pred & pred
             df = df.filter(~drop_pred)
-        elif typ == "noop":
-            pass
-        else:
-            raise ConfigError(f"unsupported stanza operator {typ!r}")
+            continue
+        if typ == "noop":
+            continue
+        before = df.columns
+        if pred is not None:
+            # predicate and prior values both read the frame before the
+            # operator, each evaluated once
+            df = df.select(
+                "*", pred.alias("__if"),
+                *[F.col(c).alias(f"__was_{i}") for i, c in enumerate(before)],
+            )
+        out = _run_stanza_operator(df, typ, op)
         if typ in _PARSER_TYPES:
-            df = _apply_sub_parsers(df, op)
-            if "__if_src" in df.columns:
-                df = df.drop("__if_src")
-            if on_error in ("drop", "drop_quiet"):
-                new_cols = [c for c in df.columns if c not in before_cols]
-                if new_cols:
-                    produced = reduce(
-                        lambda a, b: a | b,
-                        [F.col(c).isNotNull() for c in new_cols],
-                    )
-                    applied = pred if pred is not None else F.lit(True)
-                    df = df.filter(produced | ~applied)
+            out = _apply_sub_parsers(out, op)
+            new_cols = [c for c in out.columns if c not in df.columns]
+            if on_error in ("drop", "drop_quiet") and new_cols:
+                produced = reduce(
+                    lambda a, b: a | b,
+                    [F.col(c).isNotNull() for c in new_cols],
+                )
+                out = out.filter(
+                    produced if pred is None else ~F.col("__if") | produced
+                )
+        df = out if pred is None else _skip(out, before)
     return df
+
+
+def _run_stanza_operator(df: DataFrame, typ: str, op: dict) -> DataFrame:
+    """One stanza operator, ungated."""
+    from .operators import mutate, parse
+
+    src = _field(op, "parse_from", "body")
+    to = _field(op, "parse_to", "parsed")
+    if typ == "regex_parser":
+        # on_error=drop is applied by the caller (it must not drop
+        # if-skipped rows, which the parser-internal drop would)
+        return parse.regex_parser(df, src, op["regex"], "send")
+    if typ == "json_parser":
+        return parse.json_parser(
+            df, src, op.get("schema", "map<string,string>"), to
+        )
+    if typ == "csv_parser":
+        header = op.get("header")
+        if isinstance(header, str):
+            header = header.split(op.get("delimiter", ","))
+        schema = op.get("schema") or ", ".join(
+            f"`{h}` string" for h in header
+        )
+        return parse.csv_parser(df, src, schema, to, op.get("delimiter", ","))
+    if typ == "keyvalue_parser":
+        return parse.keyvalue_parser(
+            df, src, to,
+            pair_delim=op.get("pair_delimiter", " "),
+            kv_delim=op.get("delimiter", "="),
+        )
+    if typ == "jsonarray_parser":
+        return parse.jsonarray_parser(df, src, to, op.get("header"))
+    if typ == "time_parser":
+        return parse.time_parser(
+            df, src, op.get("layout_type", "strptime"),
+            op.get("layout"), op.get("to", "ts"),
+        )
+    if typ == "severity_parser":
+        return parse.severity_parser(df, src, mapping=op.get("mapping"))
+    if typ == "trace_parser":
+        return _apply_sub_parsers(df, {"trace": op})
+    if typ == "uri_parser":
+        return parse.uri_parser(df, src)
+    if typ == "container":
+        return parse.container_parser(
+            df, source=src, path_col=op.get("path_col"),
+            fmt=op.get("format"),
+            add_metadata_from_filepath=op.get(
+                "add_metadata_from_file_path", True
+            ),
+        )
+    if typ == "syslog_parser":
+        if op.get("protocol", "rfc3164") == "rfc5424":
+            return parse.syslog_rfc5424_parser(
+                df, src, op.get("enable_octet_counting", False)
+            )
+        return parse.regex_parser(df, src, _RFC3164_GROK)
+    if typ == "add":
+        v = op.get("value")
+        # stanza EXPR(...) values compile via expr-lang; here the
+        # inner expression is Spark-SQL (documented deviation)
+        col = (
+            F.expr(str(v)[5:-1])
+            if isinstance(v, str) and v.startswith("EXPR(")
+            else F.lit(v)
+        )
+        return mutate.add(df, _field(op, "field"), col)
+    if typ == "copy":
+        return mutate.copy_field(df, _field(op, "from"), _field(op, "to"))
+    if typ == "move":
+        return mutate.move(df, _field(op, "from"), _field(op, "to"))
+    if typ == "remove":
+        return mutate.remove(df, _field(op, "field"))
+    if typ == "retain":
+        kept = [_strip_field(x) for x in op["fields"]]
+        # the `if` snapshot columns (`__if`, `__was_<i>`) ride along
+        return mutate.retain(
+            df, kept + [c for c in df.columns if c.startswith("__")]
+        )
+    if typ == "unquote":
+        return mutate.unquote(df, _field(op, "field"))
+    raise ConfigError(f"unsupported stanza operator {typ!r}")
+
+
+def _skip(df: DataFrame, before: list[str]) -> DataFrame:
+    """helper/transformer.go Skip: blend an operator's output with the
+    `__was_<i>` snapshot of ``before`` so that rows where ``__if`` is
+    false keep their prior values."""
+    ran = F.col("__if")
+    after = set(df.columns)
+    cols = []
+    for i, c in enumerate(before):
+        was = f"__was_{i}"
+        if c not in after:
+            cols.append(F.when(~ran, F.col(was)).alias(c))
+        elif df.schema[c].dataType != df.schema[was].dataType:
+            # an `otherwise(old)` would cast the old value to the new
+            # type, which raises under ANSI for e.g. an epoch string
+            cols.append(F.when(ran, F.col(c)).alias(c))
+        else:
+            cols.append(F.when(ran, F.col(c)).otherwise(F.col(was)).alias(c))
+    snapshot = {"__if", *(f"__was_{i}" for i in range(len(before)))}
+    cols += [
+        F.when(ran, F.col(c)).alias(c)
+        for c in df.columns if c not in snapshot and c not in before
+    ]
+    return df.select(*cols)
 
 
 # ---------------------------------------------------------------------------

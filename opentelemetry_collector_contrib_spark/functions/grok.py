@@ -302,8 +302,10 @@ class GrokPattern:
                 import pyarrow as pa
                 import pyarrow.compute as pc
 
+                # typed: an all-None batch would otherwise infer `null`
                 m = pc.extract_regex(
-                    pa.Array.from_pandas(s), pattern=regex_str
+                    pa.Array.from_pandas(s, type=pa.string()),
+                    pattern=regex_str,
                 )
                 return pd.DataFrame(
                     {n: pc.struct_field(m, n).to_pandas() for n in names}

@@ -98,59 +98,17 @@ class Router:
             )
         return out
 
-    def write_routed(
-        self,
-        df: DataFrame,
-        base_path: str,
-        fmt: str = "parquet",
-        max_records_per_file: int | None = None,
-        compression: str | None = None,
-        mark_first: bool = False,
-    ) -> None:
+    def write_routed(self, df: DataFrame, base_path: str) -> None:
         """Scale path: ONE pass over the input — tag (or explode the
-        multi-match tag array), then a single partitionBy(route) write.
-        At 100 TB this beats N filtered scans by ~N×; the explode only
-        duplicates rows that actually multi-match.
-
-        ``max_records_per_file`` is the fileexporter rotation analog
-        (exporter/fileexporter/config.go:22-96 rotation max_megabytes →
-        here a row cap: Spark's write tasks roll to a new file at the
-        cap); ``compression`` maps the exporter's compression option
-        (zstd there; any Spark codec here). Codec choice, measured at
-        sf0.1 warm (write + the flagship's 3 pruned read-backs): snappy
-        2.85 s total / 34 MB, lz4 3.22 s / 34 MB, zstd 3.51 s / 22 MB.
-        Default None = Spark's snappy — fastest when the sink is
-        consumed immediately (the hot-pipeline shape); pass "zstd" (the
-        reference fileexporter's codec) for archival sinks where the
-        35% smaller footprint dominates.
-
-        ``mark_first`` adds a ``_first_route`` boolean marking each
-        source row's FIRST route copy, so downstream consumers that need
-        every source row exactly once (corpus-level aggregates over the
-        written sinks) can filter instead of re-reading + re-parsing the
-        raw input — multi-matched rows are otherwise duplicated across
-        sink partitions by design."""
+        multi-match tag array), then a single partitionBy(route) parquet
+        write. At 100 TB this beats N filtered scans by ~N×; the explode
+        only duplicates rows that actually multi-match. (Rotation and
+        codec are the config file exporter's options,
+        CollectorConfig._file_writer.)"""
         if self.match_once:
             tagged = self.tag(df)
-            if mark_first:
-                tagged = tagged.withColumn("_first_route", F.lit(True))
-        elif mark_first:
-            tagged = (
-                self.tags_multi(df)
-                .select(
-                    "*",
-                    F.posexplode_outer("routes").alias("_pos", "route"),
-                )
-                .withColumn("_first_route", F.col("_pos") == 0)
-                .drop("routes", "_pos")
-            )
         else:
             tagged = self.tags_multi(df).withColumn(
                 "route", F.explode_outer("routes")
             ).drop("routes")
-        writer = tagged.write.mode("overwrite").partitionBy("route")
-        if max_records_per_file is not None:
-            writer = writer.option("maxRecordsPerFile", max_records_per_file)
-        if compression is not None:
-            writer = writer.option("compression", compression)
-        writer.format(fmt).save(base_path)
+        tagged.write.mode("overwrite").partitionBy("route").parquet(base_path)

@@ -848,14 +848,10 @@ def _truthy(c: Column) -> Column:
     return c.cast("boolean")
 
 
-def compile_condition(src: str, ctx: Context | None = None) -> Column:
-    """Bare condition → Column. Converter failures inside the condition
-    follow the context's error mode: ignore/silent ⇒ the condition is
-    false for failing rows (record passes through unmodified); propagate
-    ⇒ raise."""
-    ctx = ctx or Context()
-    ctx.take_failures()  # drop stale entries from unrelated compiles
-    col = compile_bool(parse_condition(src), ctx)
+def _fold_condition_failures(col: Column, ctx: Context) -> Column:
+    """Consume the converter failures noted while compiling condition
+    ``col``: ignore/silent ⇒ the condition is false for failing rows
+    (record passes through unmodified); propagate ⇒ raise."""
     fails = ctx.take_failures()
     if not fails:
         return col
@@ -865,6 +861,15 @@ def compile_condition(src: str, ctx: Context | None = None) -> Column:
             pred, F.raise_error(F.lit(f"ottl: {fails[0][1]}"))
         ).otherwise(col)
     return F.when(pred, F.lit(False)).otherwise(col)
+
+
+def compile_condition(src: str, ctx: Context | None = None) -> Column:
+    """Bare condition → Column. Converter failures inside the condition
+    follow the context's error mode (``_fold_condition_failures``)."""
+    ctx = ctx or Context()
+    ctx.take_failures()  # drop stale entries from unrelated compiles
+    col = compile_bool(parse_condition(src), ctx)
+    return _fold_condition_failures(col, ctx)
 
 
 def compile_routing_statement(src: str, ctx: Context):
@@ -883,19 +888,9 @@ def compile_routing_statement(src: str, ctx: Context):
     side-effect-free DataFrame equivalent (documented deviation)."""
     stmt = parse_statement(src)
     ctx.take_failures()
-    if stmt.where is None:
-        cond = F.lit(True)
-    else:
-        cond = compile_bool(stmt.where, ctx)
-        fails = ctx.take_failures()
-        if fails:
-            pred = reduce(lambda a, b: a | b, (p for p, _ in fails))
-            if ctx.error_mode == "propagate":
-                cond = F.when(
-                    pred, F.raise_error(F.lit(f"ottl: {fails[0][1]}"))
-                ).otherwise(cond)
-            else:
-                cond = F.when(pred, F.lit(False)).otherwise(cond)
+    cond = F.lit(True)
+    if stmt.where is not None:
+        cond = _fold_condition_failures(compile_bool(stmt.where, ctx), ctx)
     if stmt.editor.name == "route":
         if stmt.editor.args:
             raise OTTLError("route() takes no arguments")

@@ -7,7 +7,8 @@ Mirrors a collector logs pipeline:
   → routing connector (errors / tool / slow / default; both match modes)
   → exporters (per-sink partitioned writes)
   + countconnector / sumconnector metrics and a groupbyattrs-style
-    conversation rollup (salted for the Zipf-hot conv_id).
+    conversation rollup (one groupBy: Spark's partial aggregate folds the
+    Zipf-hot conv_id before the shuffle).
 
 :func:`flagship_stages` is the ONE definition of this DAG. The runner
 (plans/runner.py, jobs/run_pipeline.py), :func:`run_flagship` and

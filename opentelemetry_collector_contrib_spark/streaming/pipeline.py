@@ -10,7 +10,7 @@ Scale notes: the file source lists new files per trigger (cheap against
 an object store with a manifest/Iceberg layout); maxFilesPerTrigger
 bounds micro-batch size like the collector's `batch` processor bounds
 send size. State stores (dedup window, session window) are keyed by
-(window, group) — hot conv_ids salt exactly as in the batch rollup.
+(window, group), unsalted like the batch rollup.
 """
 
 from __future__ import annotations
@@ -285,28 +285,6 @@ def percentile_connector_stream(
         .groupBy(F.window("ts", interval).alias("w"), *dims)
         .agg(*aggs)
         .select(F.col("w.start").alias("interval_start"), *dims, *labels)
-    )
-
-
-def stratified_sample_stream(
-    stream: DataFrame,
-    strata_col: str,
-    rates: dict,
-    key_col: str,
-    default_rate: float = 0.0,
-) -> DataFrame:
-    """Stratified sampler on a stream. The batch gate
-    (textops.stratified_sample) is a pure deterministic hash filter — no
-    RNG state, no aggregation — so the streaming form IS the batch form:
-    stateless, watermark-free, and restart-idempotent by construction
-    (a replayed micro-batch re-derives the identical keep decision,
-    where Bernoulli sampling would re-draw). Exposed as a named stage so
-    config pipelines can reference it uniformly."""
-    from ..textops import stratified_sample
-
-    return stratified_sample(
-        stream, strata_col, rates, key_col=key_col,
-        default_rate=default_rate,
     )
 
 

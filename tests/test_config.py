@@ -494,8 +494,8 @@ def test_stanza_if_skipped_rows_never_dropped(spark, tmp_path):
 def test_stanza_if_on_mutations(spark, tmp_path):
     src = str(tmp_path / "ifmut")
     spark.createDataFrame(
-        [("a", '"quoted"', 1), ("b", '"stays"', 2)],
-        "id string, body string, n int",
+        [("a", '"quoted"', 1, "m1"), ("b", '"stays"', 2, "m2")],
+        "id string, body string, n int, m string",
     ).write.mode("overwrite").parquet(src)
 
     from opentelemetry_collector_contrib_spark.config import CollectorConfig
@@ -506,6 +506,7 @@ def test_stanza_if_on_mutations(spark, tmp_path):
              "if": "n = 1"},
             {"type": "unquote", "field": "body", "if": "n = 1"},
             {"type": "copy", "from": "id", "to": "id2", "if": "n = 2"},
+            {"type": "move", "from": "m", "to": "moved", "if": "n = 2"},
         ]}},
         "exporters": {"debug": {}},
         "service": {"pipelines": {"logs/in": {
@@ -516,6 +517,64 @@ def test_stanza_if_on_mutations(spark, tmp_path):
     assert rows["a"]["tag"] == "A" and rows["b"]["tag"] is None
     assert rows["a"]["body"] == "quoted" and rows["b"]["body"] == '"stays"'
     assert rows["a"]["id2"] is None and rows["b"]["id2"] == "b"
+    # move: source nulled where moved, destination only where moved
+    assert (rows["a"]["m"], rows["a"]["moved"]) == ("m1", None)
+    assert (rows["b"]["m"], rows["b"]["moved"]) == (None, "m2")
+
+
+def test_stanza_if_skipped_rows_keep_parser_outputs(spark, tmp_path):
+    """helper/transformer.go Skip on parsers: a row failing `if` keeps
+    the fields a gated parser (or its timestamp sub-parser) would
+    overwrite; a field retyped in place is NULL there, and a skipped
+    row the parser could not have parsed raises nothing."""
+    import datetime as dt
+
+    from opentelemetry_collector_contrib_spark.config import CollectorConfig
+
+    src = str(tmp_path / "ifparse")
+    t0 = dt.datetime(2020, 1, 1)
+    spark.createDataFrame(
+        [("a", 1, t0, "WARN", 13, '{"k": "v"}', {"old": "a"},
+          "2025-01-02 03:04:05", "ERROR", "GET 2025-03-04 05:06:07",
+          "1700000000"),
+         ("b", 2, t0, "WARN", 13, '{"k": "w"}', {"old": "b"},
+          "garbage", "ERROR", "GET 2025-03-04 05:06:07", "1700000000")],
+        "id string, n int, ts timestamp, severity_text string, "
+        "severity_number int, body string, p map<string,string>, "
+        "at string, lvl string, msg string, epoch string",
+    ).repartition(2, "id").write.mode("overwrite").parquet(src)
+    gated = {"if": "n = 1"}
+    out = CollectorConfig({
+        "receivers": {"parquet": {"path": src, "operators": [
+            {"type": "time_parser", "parse_from": "at",
+             "layout": "%Y-%m-%d %H:%M:%S", **gated},
+            {"type": "severity_parser", "parse_from": "lvl", **gated},
+            {"type": "json_parser", "parse_from": "body", "parse_to": "p",
+             **gated},
+            {"type": "regex_parser", "parse_from": "msg",
+             "regex": r"%{WORD:verb} %{GREEDYDATA:when}",
+             "timestamp": {"parse_from": "when",
+                           "layout": "%Y-%m-%d %H:%M:%S"}, **gated},
+            {"type": "time_parser", "parse_from": "epoch",
+             "layout_type": "epoch", "layout": "s", "to": "epoch",
+             **gated},
+        ]}},
+        "exporters": {"debug": {}},
+        "service": {"pipelines": {"logs/in": {
+            "receivers": ["parquet"], "exporters": ["debug"],
+        }}},
+    }).run(spark)["debug"]
+    rows = {r["id"]: r for r in out.collect()}
+    a, b = rows["a"], rows["b"]
+    assert a["ts"] == dt.datetime(2025, 3, 4, 5, 6, 7)
+    assert (a["severity_text"], a["severity_number"]) == ("ERROR", 17)
+    assert dict(a["p"]) == {"k": "v"} and a["verb"] == "GET"
+    assert a["epoch"] == dt.datetime(2023, 11, 14, 22, 13, 20)
+    assert b["ts"] == t0
+    assert (b["severity_text"], b["severity_number"]) == ("WARN", 13)
+    assert dict(b["p"]) == {"old": "b"} and b["verb"] is None
+    assert b["epoch"] is None
+    assert not [c for c in out.columns if c.startswith("__")]
 
 
 def test_stanza_if_on_remove_and_retain(spark, tmp_path):

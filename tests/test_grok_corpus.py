@@ -362,3 +362,19 @@ def test_product_pattern_vectorized(spark):
     assert rows[0]["elb"] == "my-loadbalancer"
     assert rows[0]["response"] == "200"
     assert rows[1]["elb"] is None
+
+
+def test_regex_parser_all_null_batch(spark):
+    """A batch whose source is entirely NULL parses to NULL captures
+    (an untyped all-None batch has no RE2 kernel)."""
+    from opentelemetry_collector_contrib_spark.operators.parse import (
+        regex_parser,
+    )
+
+    df = spark.createDataFrame([(None,), (None,)], "msg string")
+    out = regex_parser(
+        df.coalesce(1), "msg", r"%{WORD:verb} %{GREEDYDATA:rest}"
+    )
+    assert [tuple(r) for r in out.select("verb", "rest").collect()] == [
+        (None, None), (None, None)
+    ]

@@ -194,33 +194,6 @@ def test_maintained_rollup_matches_full_recompute(spark, tmp_path):
     assert got4 == want_b0
 
 
-def test_write_routed_rotation_and_compression(spark, tmp_path):
-    """fileexporter rotation analog: maxRecordsPerFile rolls sink files
-    at the cap; compression sets the codec (visible in file names)."""
-    from opentelemetry_collector_contrib_spark.operators.route import (
-        Route,
-        Router,
-    )
-
-    df = spark.range(0, 1000).select(
-        F.col("id"), (F.col("id") % 2 == 0).alias("even")
-    )
-    router = Router([Route("evens", F.col("even"))], match_once=True)
-    base = str(tmp_path / "sinks")
-    router.write_routed(
-        df, base, max_records_per_file=100, compression="zstd"
-    )
-    files = [
-        f for f in os.listdir(os.path.join(base, "route=evens"))
-        if f.endswith(".parquet")
-    ]
-    # 500 even rows / cap 100 → at least 5 rolled files, zstd codec
-    assert len(files) >= 5
-    assert all(".zstd." in f for f in files)
-    got = spark.read.parquet(base)
-    assert got.filter(F.col("route") == "evens").count() == 500
-
-
 def test_config_exporter_rotation_compression(spark, tmp_path):
     """YAML exporter rotation/compression options reach the write."""
     from opentelemetry_collector_contrib_spark.config import CollectorConfig

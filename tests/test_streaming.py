@@ -297,14 +297,11 @@ def test_percentile_connector_stream_matches_batch_sketch(
 def test_stratified_sample_stream_restart_idempotent(
     spark, sf_dir, tmp_path
 ):
-    """The streaming sampler keeps the SAME rows when the stream is
-    drained twice from a checkpoint (deterministic hash gate — a retried
-    or resumed micro-batch cannot re-draw)."""
+    """The stratified sampler on a stream keeps the SAME rows when the
+    stream is drained twice from a checkpoint (deterministic hash gate —
+    a retried or resumed micro-batch cannot re-draw)."""
     import shutil
 
-    from opentelemetry_collector_contrib_spark.streaming.pipeline import (
-        stratified_sample_stream,
-    )
     from opentelemetry_collector_contrib_spark.textops import (
         stratified_sample,
     )
@@ -321,7 +318,7 @@ def test_stratified_sample_stream_restart_idempotent(
 
     def drain():
         stream = read_transcripts_stream(spark, str(in_dir))
-        sampled = stratified_sample_stream(
+        sampled = stratified_sample(
             stream, "role", rates, key_col="conv_id", default_rate=0.1
         )
         q = (
