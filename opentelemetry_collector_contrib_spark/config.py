@@ -82,6 +82,7 @@ from typing import Any
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import AtomicType, StringType
 
 from .operators.aggregate import count_connector, sum_connector
 from .operators.dedup import log_dedup
@@ -364,12 +365,14 @@ def _apply_stanza_operators(df: DataFrame, ops) -> DataFrame:
     - ``if``: a row predicate (Spark-SQL here; expr-lang in the
       reference — same documented deviation as EXPR() values). Rows
       failing it pass through the operator untouched (transformer.go
-      Skip): the operator runs as it would ungated and ``_skip`` keeps
-      each skipped row's prior values. A flattened schema cannot add or
-      drop a column per row, so a field the operator adds is NULL on
-      skipped rows, one it removes is NULL where it ran, and one it
-      retypes in place is NULL on skipped rows. ``filter`` instead
-      drops only rows matching both ``if`` and ``expr``.
+      Skip): the operator runs as it would ungated, on NULL inputs
+      where ``if`` fails, and ``_skip`` restores each skipped row's
+      prior values. A flattened schema cannot add or drop a column per
+      row, so a field the operator adds is NULL on skipped rows, one it
+      removes is NULL where it ran, and one it retypes in place keeps
+      its prior value on skipped rows only where ``try_cast`` converts
+      it (NULL otherwise). ``filter`` instead drops only rows matching
+      both ``if`` and ``expr``.
     - ``on_error`` ∈ send/send_quiet/drop/drop_quiet: send keeps the
       row with null parse outputs (null-safe extraction — the default);
       drop removes rows the parser was applied to but produced nothing.
@@ -396,10 +399,15 @@ def _apply_stanza_operators(df: DataFrame, ops) -> DataFrame:
             continue
         before = df.columns
         if pred is not None:
-            # predicate and prior values both read the frame before the
-            # operator, each evaluated once
+            # the predicate is evaluated once, on the frame before the
+            # operator; the operator sees NULL inputs on skipped rows, so
+            # it neither raises nor pays for them there (Spark may
+            # evaluate it on every row), and `__was_<i>` keeps their
+            # prior values for _skip
+            df = df.select("*", pred.alias("__if"))
             df = df.select(
-                "*", pred.alias("__if"),
+                *[F.when(F.col("__if"), F.col(c)).alias(c) for c in before],
+                "__if",
                 *[F.col(c).alias(f"__was_{i}") for i, c in enumerate(before)],
             )
         out = _run_stanza_operator(df, typ, op)
@@ -491,10 +499,11 @@ def _run_stanza_operator(df: DataFrame, typ: str, op: dict) -> DataFrame:
         return mutate.remove(df, _field(op, "field"))
     if typ == "retain":
         kept = [_strip_field(x) for x in op["fields"]]
-        # the `if` snapshot columns (`__if`, `__was_<i>`) ride along
-        return mutate.retain(
-            df, kept + [c for c in df.columns if c.startswith("__")]
-        )
+        if "__if" in df.columns:
+            # gated: the Skip snapshot (`__if` and the `__was_<i>` after
+            # it) rides along
+            kept += df.columns[df.columns.index("__if"):]
+        return mutate.retain(df, kept)
     if typ == "unquote":
         return mutate.unquote(df, _field(op, "field"))
     raise ConfigError(f"unsupported stanza operator {typ!r}")
@@ -511,12 +520,23 @@ def _skip(df: DataFrame, before: list[str]) -> DataFrame:
         was = f"__was_{i}"
         if c not in after:
             cols.append(F.when(~ran, F.col(was)).alias(c))
-        elif df.schema[c].dataType != df.schema[was].dataType:
-            # an `otherwise(old)` would cast the old value to the new
-            # type, which raises under ANSI for e.g. an epoch string
-            cols.append(F.when(ran, F.col(c)).alias(c))
+            continue
+        new, old = df.schema[c].dataType, df.schema[was].dataType
+        if new.simpleString() == old.simpleString():
+            prior = F.col(was)
+        elif isinstance(new, StringType) or (
+            isinstance(old, StringType) and isinstance(new, AtomicType)
+        ):
+            # retyped in place: a plain `otherwise(old)` would cast under
+            # ANSI and raise (e.g. on an epoch string); try_cast keeps
+            # the prior value where it converts and never raises. It is
+            # defined from every type to string and from a string to
+            # every atomic type.
+            prior = F.col(was).try_cast(new)
         else:
-            cols.append(F.when(ran, F.col(c)).otherwise(F.col(was)).alias(c))
+            # e.g. a string parsed in place into a map
+            prior = F.lit(None)
+        cols.append(F.when(ran, F.col(c)).otherwise(prior).alias(c))
     snapshot = {"__if", *(f"__was_{i}" for i in range(len(before)))}
     cols += [
         F.when(ran, F.col(c)).alias(c)

@@ -525,24 +525,31 @@ def test_stanza_if_on_mutations(spark, tmp_path):
 def test_stanza_if_skipped_rows_keep_parser_outputs(spark, tmp_path):
     """helper/transformer.go Skip on parsers: a row failing `if` keeps
     the fields a gated parser (or its timestamp sub-parser) would
-    overwrite; a field retyped in place is NULL there, and a skipped
-    row the parser could not have parsed raises nothing."""
+    overwrite; a field retyped in place keeps its prior value only
+    where it converts, and a skipped row the parser could not have
+    parsed raises nothing."""
     import datetime as dt
 
     from opentelemetry_collector_contrib_spark.config import CollectorConfig
 
     src = str(tmp_path / "ifparse")
     t0 = dt.datetime(2020, 1, 1)
+    # 60 filler columns: past spark.sql.codegen.maxFields Spark evaluates
+    # every expression of a projection on every row, so a skipped row's
+    # unparsable `at` or duplicate `kv` key must never reach the parser
     spark.createDataFrame(
         [("a", 1, t0, "WARN", 13, '{"k": "v"}', {"old": "a"},
           "2025-01-02 03:04:05", "ERROR", "GET 2025-03-04 05:06:07",
-          "1700000000"),
+          "1700000000", "k=1"),
          ("b", 2, t0, "WARN", 13, '{"k": "w"}', {"old": "b"},
-          "garbage", "ERROR", "GET 2025-03-04 05:06:07", "1700000000")],
+          "garbage", "ERROR", "GET 2025-03-04 05:06:07", "1700000000",
+          "k=1 k=1")],
         "id string, n int, ts timestamp, severity_text string, "
         "severity_number int, body string, p map<string,string>, "
-        "at string, lvl string, msg string, epoch string",
-    ).repartition(2, "id").write.mode("overwrite").parquet(src)
+        "at string, lvl string, msg string, epoch string, kv string",
+    ).selectExpr("*", *[f"'f{i}' AS f{i}" for i in range(60)]).repartition(
+        2, "id"
+    ).write.mode("overwrite").parquet(src)
     gated = {"if": "n = 1"}
     out = CollectorConfig({
         "receivers": {"parquet": {"path": src, "operators": [
@@ -558,6 +565,9 @@ def test_stanza_if_skipped_rows_keep_parser_outputs(spark, tmp_path):
             {"type": "time_parser", "parse_from": "epoch",
              "layout_type": "epoch", "layout": "s", "to": "epoch",
              **gated},
+            {"type": "keyvalue_parser", "parse_from": "kv",
+             "parse_to": "kvp", **gated},
+            {"type": "add", "field": "n", "value": "x", **gated},
         ]}},
         "exporters": {"debug": {}},
         "service": {"pipelines": {"logs/in": {
@@ -574,6 +584,9 @@ def test_stanza_if_skipped_rows_keep_parser_outputs(spark, tmp_path):
     assert (b["severity_text"], b["severity_number"]) == ("WARN", 13)
     assert dict(b["p"]) == {"old": "b"} and b["verb"] is None
     assert b["epoch"] is None
+    assert dict(a["kvp"]) == {"k": "1"} and b["kvp"] is None
+    # int `n` retyped to string in place: the skipped row's 2 converts
+    assert (a["n"], b["n"]) == ("x", "2")
     assert not [c for c in out.columns if c.startswith("__")]
 
 
