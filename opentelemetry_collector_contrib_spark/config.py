@@ -94,7 +94,7 @@ from .operators.redact import redact
 from .operators.route import Route, Router
 from .ottl.compiler import Context, compile_condition
 from .ottl import StatementSequence
-from .sources.readers import read_transcripts
+from .sources.readers import read_parquet, read_transcripts
 
 
 class ConfigError(ValueError):
@@ -174,7 +174,7 @@ def _rx_transcripts(
 def _rx_parquet(
     spark: SparkSession, cfg: dict, source: DataFrame | None = None
 ) -> DataFrame:
-    return source if source is not None else spark.read.parquet(cfg["path"])
+    return source if source is not None else read_parquet(spark, cfg["path"])
 
 
 def _rx_filelog(
@@ -716,7 +716,7 @@ def _pr_enrich(df: DataFrame, cfg: dict) -> DataFrame:
     on = cfg.get("on")
     if not on:
         raise ConfigError("enrich processor needs on (join key or list)")
-    dim = df.sparkSession.read.parquet(path)
+    dim = read_parquet(df.sparkSession, path)
     if cfg.get("columns"):
         keys = on if isinstance(on, list) else [on]
         dim = dim.select(*keys, *cfg["columns"])

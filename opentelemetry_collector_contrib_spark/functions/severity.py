@@ -7,14 +7,17 @@ Reference semantics:
   5xx→ERROR): pkg/stanza/operator/helper/severity_builder.go:17-225.
 
 Spark-first realization: the mapping is a tiny dimension, so it compiles
-to either a broadcast-join against the severity_map table or (default) a
-generated CASE WHEN chain that stays inside whole-stage codegen — no UDF.
+to either a broadcast-join against the severity_map table (a JVM
+LocalRelation; the transcripts parse uses this) or a generated CASE WHEN
+chain that stays inside whole-stage codegen — no UDF either way.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from ..sources.readers import local_frame
 
 # full enum 0..24 (severity.go:11-52): each named level has 2/3/4 tiers
 SEVERITY_NUMBERS: dict[str, int] = {"DEFAULT": 0}
@@ -85,8 +88,13 @@ def severity_map_df(spark):
     severity feeds further expressions (routing conditions, group keys):
     a join output is a materialized attribute, while a CASE chain gets
     re-inlined by projection collapse into every downstream use — fatal
-    when that use is an interpreted higher-order function."""
-    return spark.createDataFrame(
+    when that use is an interpreted higher-order function.
+
+    The 461 rows reach the JVM once as Arrow and plan as a
+    ``LocalTableScan`` under the ``BroadcastHashJoin``, so building the
+    broadcast runs no Python worker (``sources.readers.local_frame``)."""
+    return local_frame(
+        spark,
         severity_map_rows(),
         "token string, severity_number int, severity_text string",
     )

@@ -8,8 +8,10 @@ All stanza parsers share `parse_from`/`parse_to`/`if`/`on_error`
 `on_error=drop` to a filter on parse success.
 
 Spark-first: every parser that a built-in covers uses the built-in
-(JVM-side, codegen): from_json, from_csv, str_to_map, to_timestamp,
-regexp_extract. Only grok/named-capture regex needs the pandas-UDF path
+(JVM-side, codegen): from_json, from_csv, split + map_from_entries,
+try_to_timestamp, regexp_extract. Under Spark's default ANSI mode a bad
+value or a repeated key never fails the job (see ``time_parser`` and
+``last_wins_map``). Only grok/named-capture regex needs the pandas-UDF path
 (functions/grok.py). The transcripts parse stage below is JVM-only:
 six fixed-token regexp_extract calls, no Python boundary.
 """
@@ -197,6 +199,34 @@ def csv_parser(
     )
 
 
+def last_wins_map(entries: Column) -> Column:
+    """``map_from_entries`` over an array of (key, value) structs where a
+    repeated key keeps its LAST value, as the reference's per-pair Go map
+    assignment does. Plain ``map_from_entries``/``str_to_map`` follow
+    ``spark.sql.mapKeyDedupPolicy``, whose default fails the whole job
+    with DUPLICATED_MAP_KEY; this keeps an entry only when no later entry
+    has its key, and leaves the session conf alone."""
+
+    def dedup(es: Column) -> Column:
+        return F.map_from_entries(F.filter(es, lambda e, i: ~F.exists(
+            F.slice(es, i + 2, F.size(es)), lambda x: x["key"] == e["key"]
+        )))
+
+    # the entries bind once, as a lambda variable: referenced directly
+    # they would be re-evaluated for every element the filter visits
+    return F.transform(F.array(entries), dedup)[0]
+
+
+def kv_map(c: Column, pair_delim: str, kv_delim: str) -> Column:
+    """``str_to_map(c, pair_delim, kv_delim)`` with last-wins keys: the
+    same regex split into pairs and into at most (key, value), a pair
+    without ``kv_delim`` mapping to NULL."""
+    kvs = F.transform(F.split(c, pair_delim, -1), lambda p: F.split(p, kv_delim, 2))
+    return last_wins_map(F.transform(
+        kvs, lambda kv: F.struct(kv[0].alias("key"), F.get(kv, 1).alias("value"))
+    ))
+
+
 def keyvalue_parser(
     df: DataFrame,
     source: str,
@@ -205,10 +235,8 @@ def keyvalue_parser(
     kv_delim: str = "=",
 ) -> DataFrame:
     """stanza keyvalue_parser (parser/keyvalue/config.go:38-39) →
-    str_to_map (JVM-side)."""
-    return df.withColumn(
-        to, F.str_to_map(F.col(source), F.lit(pair_delim), F.lit(kv_delim))
-    )
+    ``kv_map`` (JVM-side); ``k=1 k=2`` parses to {k: 2}."""
+    return df.withColumn(to, kv_map(F.col(source), pair_delim, kv_delim))
 
 
 def time_parser(
@@ -221,24 +249,27 @@ def time_parser(
     """stanza time_parser (helper/time.go:19-110): strptime/epoch layouts.
 
     strptime %-codes are translated to Spark datetime patterns; epoch
-    variants map to timestamp_seconds/millis/micros.
+    variants map to timestamp_seconds/millis/micros. A value that does
+    not parse becomes NULL (``on_error: send``), under ANSI mode too:
+    ``try_to_timestamp`` and ``try_cast``, never a failed job.
     """
     c = F.col(source)
     if layout_type == "epoch":
         unit = layout or "s"
+        n = c.try_cast("long")
         if unit == "s":
-            out = F.timestamp_seconds(c.cast("long"))
+            out = F.timestamp_seconds(n)
         elif unit == "ms":
-            out = F.timestamp_millis(c.cast("long"))
+            out = F.timestamp_millis(n)
         elif unit == "us":
-            out = F.timestamp_micros(c.cast("long"))
+            out = F.timestamp_micros(n)
         elif unit == "ns":
-            out = F.timestamp_micros((c.cast("long") / 1000).cast("long"))
+            out = F.timestamp_micros((n / 1000).cast("long"))
         else:
             raise ValueError(f"epoch unit {unit!r}")
         return df.withColumn(to, out)
     fmt = _strptime_to_spark(layout or "%Y-%m-%d %H:%M:%S")
-    return df.withColumn(to, F.to_timestamp(c, fmt))
+    return df.withColumn(to, F.try_to_timestamp(c, F.lit(fmt)))
 
 
 _STRPTIME_MAP = {
@@ -561,8 +592,7 @@ def syslog_rfc5424_parser(
     )
     sd_map = F.when(
         sd_params.isNotNull(),
-        F.str_to_map(F.regexp_replace(sd_params, '"', ""), F.lit(" "),
-                     F.lit("=")),
+        kv_map(F.regexp_replace(sd_params, '"', ""), " ", "="),
     )
     return (
         df.withColumn(prefix + "facility", (pri / 8).cast("int"))

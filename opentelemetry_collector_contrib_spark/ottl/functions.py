@@ -838,6 +838,8 @@ def _parse_key_value(args, ctx):
     quote strip per element — no Python boundary."""
     import re as _re
 
+    from ..operators.parse import last_wins_map
+
     c = _one(args, ctx)
     d1 = str(literal_arg(args[1])) if len(args) > 1 else "="
     d2 = str(literal_arg(args[2])) if len(args) > 2 else " "
@@ -858,7 +860,8 @@ def _parse_key_value(args, ctx):
         ).otherwise(v)
         return F.struct(k.alias("key"), v.alias("value"))
 
-    return F.map_from_entries(F.transform(pairs, entry))
+    # a repeated key keeps its last value, as parseutils' map assignment
+    return last_wins_map(F.transform(pairs, entry))
 
 
 def _hex(args, ctx):

@@ -32,9 +32,11 @@ a crash between the two re-runs the stage, never serves half a table.
 
 Scale notes: state records are O(stages), not O(rows) — driver-side JSON
 is fine at any data scale. Lineage per-file row counts are read
-in-process from the footers of the part files the write just produced,
-and a fresh checkpoint is loaded with the schema the write already
-knows; no Spark job reads the checkpoint back.
+in-process from the footers of the part files the write just produced.
+A fresh checkpoint is loaded with the schema the write already knows,
+and a resumed one with the schema of one of its footers
+(``sources.readers.read_parquet``), so no Spark job reads a checkpoint
+back.
 """
 
 from __future__ import annotations
@@ -51,6 +53,8 @@ from types import MappingProxyType
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.util import inheritable_thread_target
+
+from ..sources.readers import local_frame, read_parquet
 
 STATE_DIR = "_pipeline_state"
 
@@ -152,11 +156,11 @@ class PipelineRunner:
         in-memory catalog is empty, so re-register the external table
         from the checkpoint's own schema first."""
         if stage.bucket_by is None:
-            return self.spark.read.parquet(ckpt)
+            return read_parquet(self.spark, ckpt)
         tbl = self._ckpt_table(stage.name)
         if not self.spark.catalog.tableExists(tbl):
             key, n = stage.bucket_by
-            ddl = self.spark.read.parquet(ckpt).schema.toDDL()
+            ddl = read_parquet(self.spark, ckpt).schema.toDDL()
             sorted_by = (
                 f"SORTED BY ({', '.join(stage.sort_by)}) " if stage.sort_by else ""
             )
@@ -305,7 +309,8 @@ class PipelineRunner:
                     float(r["wall_s"]),
                 )
             )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             recs,
             "stage string, fingerprint string, status string, "
             "rows_out long, n_files int, wall_s double",

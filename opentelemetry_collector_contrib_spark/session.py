@@ -62,9 +62,14 @@ def get_spark(
         # fragmented allocator state under Arrow batch churn — after a few
         # jobs at high core counts every UDF stage degrades ~10x with
         # 70-90% kernel-side CPU (mmap storms). Non-reused workers keep
-        # allocator state clean; spawn cost is ~100 ms amortized over
-        # multi-second tasks. jemalloc (above) additionally returns freed
-        # memory without the glibc arena pathology.
+        # allocator state clean. jemalloc (above) additionally returns
+        # freed memory without the glibc arena pathology. The price is a
+        # fork per Python task, and it is only amortized over long tasks:
+        # a 461-row severity dim built with createDataFrame(list) was a
+        # Python RDD whose 4-task broadcast took 140-175 ms a pass on 4
+        # cores with 6 ms of JVM CPU. So the pipeline's small constant
+        # tables go through sources.readers.local_frame (a JVM
+        # LocalRelation) instead, and only its UDF stages start workers.
         .config("spark.python.worker.reuse", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

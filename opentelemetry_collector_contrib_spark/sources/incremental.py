@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.runner import footer_lineage
+from .readers import local_frame
 
 STATE_FILE = "_ingest_state.json"
 
@@ -291,7 +292,8 @@ class IncrementalFileSource:
     def metrics(self) -> DataFrame:
         """One row per committed poll: batch_id, files, rows."""
         state = self._load_state()
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [
                 (b["batch_id"], b["n_new_files"], b["rows_out"])
                 for b in state["batches"]

@@ -13,12 +13,23 @@ Reference mapping (SURVEY.md §2.1):
   table format is parquet with identical reader semantics; the format
   string is a parameter so an Iceberg catalog slot in cluster deployments
   is a config change, not a code change.
+
+Building the pipeline's plans runs no Spark job. ``read_parquet``
+(transcripts, dims, runner checkpoints, a config's ``parquet`` receiver
+and ``enrich`` dim) takes its schema from one
+footer on the driver instead of the one-task inference job that a bare
+``spark.read.parquet`` submits, and ``local_frame`` hands small
+constant tables to the JVM as Arrow, so they plan as a
+``LocalTableScan`` rather than a parallelized Python RDD whose scan
+forks Python workers.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -28,13 +39,72 @@ def read_table(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFram
     return spark.read.format(fmt).load(path)
 
 
+def _first_data_file(path: str) -> str | None:
+    """``path`` itself when it is a file, else the first non-hidden file
+    under it in sorted order (hidden names start with '.' or '_', as
+    ``plans/runner.footer_lineage`` filters them)."""
+    if os.path.isfile(path):
+        return path
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith((".", "_")))
+        for name in sorted(files):
+            if not name.startswith((".", "_")):
+                return os.path.join(root, name)
+    return None
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job.
+
+    Inference (no mergeSchema) converts ONE data file's footer with
+    ``ParquetFileFormat.readSchemaFromFooter``, but reads that footer in
+    a one-task Spark job. This reads the same footer on the driver and
+    converts it with the same function and a converter built from the
+    session conf, so INT96, timestamp_ntz and Spark's own row metadata
+    resolve exactly as inference resolves them. A path with no local data
+    file goes to ``spark.read.parquet``, which fails (or, for a remote
+    URI, infers) the way it always has."""
+    data_file = _first_data_file(path)
+    if data_file is None:
+        return spark.read.parquet(path)
+    jvm = spark._jvm
+    state = spark._jsparkSession.sessionState()
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    file = jvm.org.apache.hadoop.fs.Path(os.path.abspath(data_file))
+    meta = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+        state.newHadoopConf(), file,
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+    )
+    schema = pq.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(file, meta),
+        pq.ParquetToSparkSchemaConverter(state.conf()),
+    )
+    return spark.read.schema(
+        T.StructType.fromJson(json.loads(schema.json()))
+    ).parquet(path)
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: str
+) -> DataFrame:
+    """A small constant table (``rows`` in ``schema`` DDL column order)
+    as a JVM ``LocalRelation``: the rows cross to the JVM once as Arrow
+    and plan as a ``LocalTableScan``, so no action on it forks Python
+    workers, which ``createDataFrame(list)`` does for its Python RDD."""
+    struct = T._parse_datatype_string(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(struct.fields)
+    return spark.createDataFrame(
+        pa.table({n: pa.array(c) for n, c in zip(struct.names, cols)}), struct
+    )
+
+
 def read_transcripts(spark: SparkSession, fixture_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(fixture_dir, "transcripts.parquet"))
+    return read_parquet(spark, os.path.join(fixture_dir, "transcripts.parquet"))
 
 
 def read_dims(spark: SparkSession, fixture_dir: str) -> tuple[DataFrame, DataFrame]:
-    roles = spark.read.parquet(os.path.join(fixture_dir, "dim_roles.parquet"))
-    tools = spark.read.parquet(os.path.join(fixture_dir, "dim_tools.parquet"))
+    roles = read_parquet(spark, os.path.join(fixture_dir, "dim_roles.parquet"))
+    tools = read_parquet(spark, os.path.join(fixture_dir, "dim_tools.parquet"))
     return roles, tools
 
 

@@ -256,7 +256,7 @@ def test_stanza_chain_filter_drops(spark, tmp_path):
 
 # ---- new processors: enrich / logstransform / delta-cumulative ------------
 
-def test_enrich_processor_broadcast_lookup(spark, tmp_path):
+def test_enrich_processor_broadcast_lookup(spark, tmp_path, group_job_count):
     src = str(tmp_path / "facts")
     dim = str(tmp_path / "dim")
     spark.createDataFrame(
@@ -270,7 +270,7 @@ def test_enrich_processor_broadcast_lookup(spark, tmp_path):
 
     from opentelemetry_collector_contrib_spark.config import CollectorConfig
 
-    out = CollectorConfig({
+    cfg = CollectorConfig({
         "receivers": {"parquet": {"path": src}},
         "processors": {"enrich": {
             "dimension_path": dim, "on": "tool", "columns": ["tool_kind"],
@@ -280,7 +280,13 @@ def test_enrich_processor_broadcast_lookup(spark, tmp_path):
             "receivers": ["parquet"], "processors": ["enrich"],
             "exporters": ["debug"],
         }}},
-    }).run(spark)["debug"]
+    })
+    # the receiver and the dim read their schemas from a footer, so
+    # planning the debug output submits no schema-inference job
+    outputs = {}
+    assert group_job_count(
+        "parquet-config-plan", lambda: outputs.update(cfg.run(spark))) == 0
+    out = outputs["debug"]
     rows = {r["id"]: r["tool_kind"] for r in out.collect()}
     # left semantics: the dim-missing tool keeps NULL
     assert rows == {"a": "shell", "b": "browser", "c": None}
@@ -1277,3 +1283,30 @@ def test_fanout_evaluated_once(spark, shape):
     for df in outputs.values():
         df.write.format("noop").mode("overwrite").save()
     assert acc.value == n
+
+
+# ---- parsers under Spark's default ANSI mode: a bad value is NULL (or,
+# for a repeated key, the last value wins), never a failed job ----------
+
+def _parse_one(spark, fn, value):
+    from opentelemetry_collector_contrib_spark.operators import parse
+
+    df = spark.createDataFrame([(value,)], "s string")
+    return fn(parse, df).collect()[0]
+
+
+def test_time_parser_unparsable_strptime_is_null(spark):
+    row = _parse_one(spark, lambda p, df: p.time_parser(df, "s"), "garbage")
+    assert row["ts"] is None
+
+
+def test_time_parser_non_numeric_epoch_is_null(spark):
+    row = _parse_one(
+        spark, lambda p, df: p.time_parser(df, "s", "epoch", "ms"), "abc")
+    assert row["ts"] is None
+
+
+def test_keyvalue_parser_repeated_key_keeps_last(spark):
+    row = _parse_one(
+        spark, lambda p, df: p.keyvalue_parser(df, "s"), "k=1 j k=2")
+    assert dict(row["parsed"]) == {"k": "2", "j": None}

@@ -972,6 +972,18 @@ def test_parse_key_value_multichar_delimiters(log_df):
     assert len(out) == 6
 
 
+def test_parse_key_value_repeated_key_keeps_last(log_df):
+    """parseutils assigns each pair into a Go map, so a repeated key keeps
+    its last value; under ANSI mode a plain map_from_entries raises
+    DUPLICATED_MAP_KEY and fails the job even under error_mode ignore."""
+    seq = StatementSequence(
+        ['merge_maps(attributes, ParseKeyValue("k=1 j=x k=2"), "upsert")'],
+        error_mode="ignore",
+    )
+    out = one(seq.apply(log_df))["attributes"]
+    assert (out["k"], out["j"]) == ("2", "x")
+
+
 def test_filter_ottl_conditions(log_df):
     from opentelemetry_collector_contrib_spark.operators.filter import (
         filter_ottl,

@@ -54,6 +54,9 @@ def test_parse_stage_default_is_codegen_only(spark):
     # Python node anywhere in the plan (codegen markers aren't printed
     # for an un-finalized AQE plan, so the boundary check IS the test)
     assert "regexp_extract" in plan
+    # the severity dim is a JVM LocalRelation, not a parallelized Python
+    # RDD (`Scan ExistingRDD`) whose scan forks Python workers
+    assert "ExistingRDD" not in plan and "LocalTableScan" in plan
 
 
 # a multi-group named-capture pattern over the transcript tokens: the
@@ -491,3 +494,17 @@ def test_sf_scaling_tables_never_hint_broadcast(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def test_parsed_enriched_plans_without_jobs(spark, group_job_count):
+    """Building the flagship's parse + enrich frame submits no Spark job:
+    the transcript and dim schemas come from a footer read on the driver
+    and the severity dim is a LocalRelation, so the first job of a pass
+    is one that reads rows."""
+    from opentelemetry_collector_contrib_spark.plans.flagship import (
+        parsed_enriched,
+    )
+
+    assert group_job_count(
+        "parsed-enriched-plan", lambda: parsed_enriched(spark, _fx())
+    ) == 0

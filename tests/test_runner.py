@@ -278,3 +278,25 @@ def test_runner_lineage_submits_no_read_back_job(spark, tmp_path, group_job_coun
     rec = json.loads((tmp_path / "ckpt" / "_pipeline_state" / "a.json").read_text())
     assert rec["partitions"] == read_back_lineage(spark, str(tmp_path / "ckpt" / "a"))
     assert rec["rows_out"] == 8 and rec["n_files"] == 2
+
+
+def test_runner_resume_loads_checkpoints_without_jobs(spark, tmp_path, group_job_count):
+    """Resuming loads every committed checkpoint, plain and bucketed,
+    from one footer's schema: no schema-inference job, also when the
+    catalog has lost the bucketed table (restart analog)."""
+    root = str(tmp_path / "ckpt")
+
+    def ids(sp, ctx):
+        return sp.range(8, numPartitions=2).withColumn("k", F.col("id") % 3)
+
+    stages = [Stage("plain", ids),
+              Stage("bucketed", ids, bucket_by=("k", 4), sort_by=["k"])]
+    PipelineRunner(spark, root).run(stages, {})
+    spark.sql("DROP TABLE IF EXISTS ckpt_bucketed")
+
+    out, r = {}, PipelineRunner(spark, root)
+    assert group_job_count("resume-load", lambda: out.update(r.run(stages, {}))) == 0
+    assert r.skipped == ["plain", "bucketed"]
+    for name in ("plain", "bucketed"):
+        assert out[name].schema == spark.read.parquet(os.path.join(root, name)).schema
+        assert sorted(x.id for x in out[name].collect()) == list(range(8))

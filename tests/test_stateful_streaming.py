@@ -19,14 +19,24 @@ from opentelemetry_collector_contrib_spark.streaming.stateful import (
 )
 
 
+def _write_two_batches(t, d) -> str:
+    """``t``'s first half as part0 and its second half as part1, with
+    part1 modified one second later. The file source takes new files in
+    modification-time order; two files written within the same
+    millisecond tie, and then either may arrive first."""
+    half = t.num_rows // 2
+    pq.write_table(t.slice(0, half), str(d / "part0.parquet"))
+    pq.write_table(t.slice(half), str(d / "part1.parquet"))
+    st = os.stat(d / "part0.parquet")
+    os.utime(d / "part1.parquet", (st.st_atime + 1, st.st_mtime + 1))
+    return str(d)
+
+
 @pytest.fixture(scope="module")
 def two_batch_input(sf_dir, tmp_path_factory):
     d = tmp_path_factory.mktemp("stateful_in")
     t = pq.read_table(os.path.join(sf_dir, "transcripts.parquet"))
-    half = t.num_rows // 2
-    pq.write_table(t.slice(0, half), str(d / "part0.parquet"))
-    pq.write_table(t.slice(half), str(d / "part1.parquet"))
-    return str(d)
+    return _write_two_batches(t, d)
 
 
 def _drain(spark, df, name):
@@ -118,10 +128,7 @@ EVENTS_DIR = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata/sf0.001")
 def two_batch_events(tmp_path_factory):
     d = tmp_path_factory.mktemp("zscore_in")
     t = pq.read_table(os.path.join(EVENTS_DIR, "events.parquet"))
-    half = t.num_rows // 2
-    pq.write_table(t.slice(0, half), str(d / "part0.parquet"))
-    pq.write_table(t.slice(half), str(d / "part1.parquet"))
-    return str(d)
+    return _write_two_batches(t, d)
 
 
 def test_zscore_stream_equals_batch_operator(spark, two_batch_events):
@@ -175,10 +182,7 @@ def two_batch_ordered(sf_dir, tmp_path_factory):
         .sort_by([("ts", "ascending"), ("conv_id", "ascending"),
                   ("turn_idx", "ascending")])
     )
-    half = t.num_rows // 2
-    pq.write_table(t.slice(0, half), str(d / "part0.parquet"))
-    pq.write_table(t.slice(half), str(d / "part1.parquet"))
-    return str(d)
+    return _write_two_batches(t, d)
 
 
 def test_burst_stream_equals_batch_operator(spark, sf_dir, two_batch_ordered):

@@ -37,6 +37,16 @@ def test_rfc5424_full_line(spark):
     assert r["sl_msg"] == "An application event"
 
 
+def test_rfc5424_repeated_sd_param_keeps_last(spark):
+    """RFC 5424 lets an SD-PARAM name repeat within one element; the
+    last value wins, as a map assignment per param does, instead of
+    failing the job with DUPLICATED_MAP_KEY."""
+    line = FULL.replace('iut="3"', 'iut="3" iut="4"')
+    df = spark.createDataFrame([(line,)], ["line"])
+    r = syslog_rfc5424_parser(df, "line").collect()[0]
+    assert r["sl_sd"] == {"iut": "4", "eventSource": "Application"}
+
+
 def test_rfc5424_nil_fields(spark):
     df = spark.createDataFrame([(NILS,)], ["line"])
     r = syslog_rfc5424_parser(df, "line").collect()[0]
